@@ -13,9 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_MAX_INT = 2147483647
-
-
 def parse_line(line: Column) -> list[Column]:
     """line -> [channel, user, text] per SA.scala:45-48 (split on ",",
     take 0/1, rejoin the tail with ",").
@@ -24,12 +21,19 @@ def parse_line(line: Column) -> list[Column]:
     mode a line with fewer than 2 commas would otherwise abort the whole
     job — the reference crashes the same way (ArrayIndexOutOfBounds on
     ``msg(1)``), but a single bad record must not kill a 100 TB run.
-    Malformed fields come back NULL (text: empty string)."""
+    Malformed fields come back NULL (text: empty string).
+
+    The tail's length is ``size(parts)``, not Int.MaxValue: Spark's
+    interpreted ``slice`` adds start and length in 32-bit ints, so a
+    MaxValue length wraps negative and returns an EMPTY tail. That path
+    runs whenever the text expression is inlined into a higher-order
+    function (the lexicon ``aggregate`` of a collapsed projection such
+    as ``score_raw / 10``), which silently scored every such message 0."""
     parts = F.split(line, ",")
     return [
         F.try_element_at(parts, F.lit(1)).alias("channel"),
         F.try_element_at(parts, F.lit(2)).alias("user"),
-        F.array_join(F.slice(parts, 3, _MAX_INT), ",").alias("text"),
+        F.array_join(F.slice(parts, 3, F.size(parts)), ",").alias("text"),
     ]
 
 

@@ -4,21 +4,36 @@
 ``countWindow(N).sum`` (SentimentAnalysis.scala:308-310): per key, every
 N observations form a window; emit the window's sum when the N-th
 arrives, then reset. Flink gives this via count-trigger window state; in
-Spark it is ``applyInPandasWithState`` with per-key state
+Spark it is ``applyInPandasWithState`` with per-key
 (bucket_index, running_count, running_sum):
 
+- state is keyed by a HASH GROUP of keys, ``pmod(xxhash64(key),
+  N_GROUPS)``, not by key. One state row per group holds parallel
+  per-key arrays ``keys``, ``bucket``, ``cnt``, ``acc`` (plus ``cum`` for
+  the literal form). The framework's fixed cost — Arrow slice, pandas
+  build, state pickle — is paid per group per trigger, so keying by user
+  paid it ~1,500 times per 2,000-line trigger and dominated the Python
+  worker CPU of the streaming topology; with 32 groups it is paid at
+  most 32 times. The trade-off: a touched group rewrites the state of
+  all its keys, so per-trigger state bytes grow with the distinct keys
+  seen, not with the keys in the batch;
+- ``N_GROUPS`` is fixed, not a parameter: a key's group must be the same
+  at every restart, or its restored state is silently lost. For the same
+  reason checkpoints written by the per-key layout of earlier versions
+  cannot be restored (the state schema differs);
 - rows of each micro-batch group are processed in ``order_cols`` order:
-  the group's Arrow chunks are CONCATENATED before the sort (a large
+  the group's Arrow chunks are CONCATENATED before a stable sort (a
   group can span multiple chunks within one micro-batch, and per-chunk
-  sorting would process cross-chunk rows in arrival order); cross-batch
-  order = arrival order, same contract as the batch form's order_cols.
-  The concat holds one key's one-batch rows in memory — exactly what a
-  global per-group sort requires, and bounded by the micro-batch size;
-- whenever running_count reaches N the operator emits one output row and
-  resets — so emission is per completed window, exactly the reference's
-  semantics (not per trigger);
-- state is a few numbers per key — O(keys) total, store-partitioned by
-  key alongside the shuffle.
+  sorting would process cross-chunk rows in arrival order); walking the
+  sorted rows with a dict of per-key state gives each key its rows in
+  ``order_cols`` order, with the same sequential double arithmetic as a
+  per-key function. Cross-batch order = arrival order, same contract as
+  the batch form's order_cols. The concat holds one group's one-batch
+  rows in memory, bounded by the micro-batch size;
+- whenever a key's running_count reaches N the operator emits one
+  output row and resets that key — so emission is per completed window,
+  exactly the reference's semantics (not per trigger);
+- a NULL key is one key like any other (as in ``groupBy``).
 
 ``streaming_toxicity_literal`` fuses the reference's LITERAL toxicity
 wiring (SA.scala:194-213) into ONE stateful operator: toxicUser /
@@ -41,6 +56,7 @@ from collections.abc import Iterator, Sequence
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
@@ -49,7 +65,17 @@ def _field(df: DataFrame, name: str) -> T.StructField:
     return T.StructField(name, df.schema[name].dataType)
 
 
-def _count_window_schemas(df: DataFrame, key_col: str):
+# Hash groups per count-window operator. Changing this value re-routes
+# keys to other groups: a restored checkpoint would then start every
+# moved key from empty state while its old entry sits unread in another
+# group — silent loss, not an error. Keep it fixed for a checkpoint's
+# lifetime.
+N_GROUPS = 32
+GROUP_COL = "__cw_group"
+NULL_COL = "__cw_key_is_null"
+
+
+def _count_window_schemas(df: DataFrame, key_col: str, cumulative: bool):
     out = T.StructType(
         [
             _field(df, key_col),
@@ -58,50 +84,87 @@ def _count_window_schemas(df: DataFrame, key_col: str):
             T.StructField("n", T.LongType()),
         ]
     )
-    state = T.StructType(
-        [
-            T.StructField("bucket", T.LongType()),
-            T.StructField("cnt", T.LongType()),
-            T.StructField("acc", T.DoubleType()),
-        ]
-    )
+    arrays = [
+        ("keys", df.schema[key_col].dataType),
+        ("bucket", T.LongType()),
+        ("cnt", T.LongType()),
+        ("acc", T.DoubleType()),
+    ] + ([("cum", T.DoubleType())] if cumulative else [])
+    state = T.StructType([T.StructField(n, T.ArrayType(t)) for n, t in arrays])
     return out, state
 
 
 def _make_fn(n: int, value_col: str, key_col: str, order_cols: Sequence[str],
-             cumulative: bool = False):
-    """Count-window emitter. With ``cumulative=True`` each arriving value
-    first advances a per-key running total and the window sums those
-    running totals (the literal SA.scala:201-213 wiring)."""
+             cumulative: bool):
+    """Count-window emitter over one hash group of keys. With
+    ``cumulative=True`` each arriving value first advances a per-key
+    running total and the window sums those running totals (the literal
+    SA.scala:201-213 wiring)."""
 
     def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+        group: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if cumulative:
-            bucket, cnt, acc, cum = (
-                state.get if state.exists else (0, 0, 0.0, 0.0)
-            )
-        else:
-            bucket, cnt, acc = state.get if state.exists else (0, 0, 0.0)
+        # per key: [bucket, cnt, acc] (+ cum)
+        per_key = (
+            {k: list(s) for k, *s in zip(*state.get)} if state.exists else {}
+        )
         out: list[tuple] = []
         chunks = [c for c in pdfs if len(c)]
         if chunks:
-            pdf = pd.concat(chunks).sort_values(list(order_cols))
-            for v in pdf[value_col].to_numpy():
+            pdf = pd.concat(chunks).sort_values(list(order_cols), kind="stable")
+            keys = [
+                None if null else k
+                for k, null in zip(pdf[key_col].tolist(), pdf[NULL_COL].tolist())
+            ]
+            for k, v in zip(keys, pdf[value_col].to_numpy()):
+                st = per_key.get(k)
+                if st is None:
+                    st = per_key[k] = [0, 0, 0.0, 0.0] if cumulative else [0, 0, 0.0]
                 if cumulative:
-                    cum += float(v)
-                    acc += cum
+                    st[3] += float(v)
+                    st[2] += st[3]
                 else:
-                    acc += float(v)
-                cnt += 1
-                if cnt == n:
-                    out.append((key[0], bucket, acc, cnt))
-                    bucket, cnt, acc = bucket + 1, 0, 0.0
-        state.update((bucket, cnt, acc, cum) if cumulative else (bucket, cnt, acc))
+                    st[2] += float(v)
+                st[1] += 1
+                if st[1] == n:
+                    out.append((k, st[0], st[2], st[1]))
+                    st[0], st[1], st[2] = st[0] + 1, 0, 0.0
+        width = 4 if cumulative else 3
+        state.update(
+            (list(per_key), *([st[i] for st in per_key.values()] for i in range(width)))
+        )
         if out:
             yield pd.DataFrame(out, columns=[key_col, "bucket", "value", "n"])
 
     return fn
+
+
+def _by_hash_group(df: DataFrame, n: int, value_col: str, key_col: str,
+                   order_cols: Sequence[str], cumulative: bool) -> DataFrame:
+    out_schema, state_schema = _count_window_schemas(df, key_col, cumulative)
+    key_type = df.schema[key_col].dataType
+    key = F.col(key_col)
+    if isinstance(key_type, T.IntegralType):
+        # a NULL would make pandas widen the group's key column to float,
+        # which is inexact above 2**53; NULL_COL carries the NULL instead
+        key = F.coalesce(key, F.lit(0).cast(key_type))
+    others = [c for c in dict.fromkeys([value_col, *order_cols]) if c != key_col]
+    return (
+        df.select(
+            key.alias(key_col),
+            *others,
+            F.isnull(key_col).alias(NULL_COL),
+            F.pmod(F.xxhash64(key_col), F.lit(N_GROUPS)).alias(GROUP_COL),
+        )
+        .groupBy(GROUP_COL)
+        .applyInPandasWithState(
+            _make_fn(n, value_col, key_col, order_cols, cumulative),
+            out_schema,
+            state_schema,
+            "append",
+            GroupStateTimeout.NoTimeout,
+        )
+    )
 
 
 def streaming_count_window(
@@ -118,14 +181,7 @@ def streaming_count_window(
     so it is deterministic for a fixed replay order — the equivalence
     tests compare against the batch bucketing form restricted to
     complete buckets."""
-    out_schema, state_schema = _count_window_schemas(df, key_col)
-    return df.groupBy(key_col).applyInPandasWithState(
-        _make_fn(n, value_col, key_col, order_cols),
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    return _by_hash_group(df, n, value_col, key_col, order_cols, cumulative=False)
 
 
 def streaming_toxicity_literal(
@@ -140,19 +196,7 @@ def streaming_toxicity_literal(
     per-key cumulative running sum (userMoodStream, SA.scala:285) fed
     into a count window of ``n`` emissions (buildToxicityStream,
     SA.scala:304-311), then the <= threshold alert filter."""
-    from pyspark.sql import functions as F
-
-    out_schema, state_schema = _count_window_schemas(df, key_col)
-    state_schema = T.StructType(
-        list(state_schema.fields) + [T.StructField("cum", T.DoubleType())]
-    )
-    windows = df.groupBy(key_col).applyInPandasWithState(
-        _make_fn(n, value_col, key_col, order_cols, cumulative=True),
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    windows = _by_hash_group(df, n, value_col, key_col, order_cols, cumulative=True)
     return windows.filter(F.col("value") <= F.lit(threshold))
 
 
@@ -561,8 +605,6 @@ def streaming_scd2_per_record(
     (epoch_us, tiebreak) order with the group's Arrow chunks
     concatenated before the sort (same contract as the other stateful
     fns here)."""
-    from pyspark.sql import functions as F
-
     proj = df.select(
         F.col(key_col),
         F.col(type_col),

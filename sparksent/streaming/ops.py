@@ -30,21 +30,27 @@ def streaming_tumbling_agg(
     size_s: int,
     aggs: Sequence[Column],
     ts_col: str = "ts",
-    watermark: str = "10 seconds",
+    watermark: str | None = "10 seconds",
     slide_s: int | None = None,
 ) -> DataFrame:
     """Watermarked keyed tumbling/sliding window aggregation — the
     streaming twin of windows.tumbling_agg/sliding_agg with the same
-    output shape (window_start_s BIGINT + keys + aggs)."""
+    output shape (window_start_s BIGINT + keys + aggs).
+
+    ``watermark=None`` means ``df`` already carries a watermark on
+    ``ts_col`` (e.g. for an upstream ``dropDuplicates``): Spark rejects a
+    second ``withWatermark`` on the same column with "Redefining
+    watermark is disallowed"."""
     size = f"{size_s} seconds"
     win = (
         F.window(F.col(ts_col), size)
         if slide_s is None
         else F.window(F.col(ts_col), size, f"{slide_s} seconds")
     )
+    if watermark is not None:
+        df = df.withWatermark(ts_col, watermark)
     return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("w"), *keys)
+        df.groupBy(win.alias("w"), *keys)
         .agg(*aggs)
         .withColumn("window_start_s", F.unix_timestamp(F.col("w.start")))
         .drop("w")

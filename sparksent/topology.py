@@ -238,15 +238,16 @@ def build_streaming_topology(lines: DataFrame, watermark: str = "10 seconds") ->
         msgs, ["channel", "user"], PARSED_WINDOW_S, [concat], watermark=watermark
     )
 
+    # entities is already watermarked (for its dropDuplicates)
     topics = streaming_tumbling_agg(
         entities, ["key"], TOPIC_WINDOW_S,
-        [F.count("*").alias("count")], watermark=watermark,
+        [F.count("*").alias("count")], watermark=None,
     )
     entity_opinion = streaming_tumbling_agg(
         entities, ["key"], ENTITY_OPINION_WINDOW_S,
         [(F.sum("score_raw") / F.lit(10.0)).alias("value"),
          F.first(F.lit("Entity")).alias("moodType")],
-        watermark=watermark,
+        watermark=None,
     )
     channel_mood = streaming_tumbling_agg(
         sentiment.select(F.col("channel").alias("key"), "ts", "score_raw"),

@@ -104,7 +104,7 @@ def test_cumulative_sum_equivalence(spark, replay_dir):
     assert want.exceptAll(got).count() == 0
 
 
-def test_count_window_equivalence(spark, replay_dir):
+def test_count_window_equivalence(spark, replay_dir, tmp_path):
     """Streaming count windows emit exactly the batch form's complete
     buckets, in the same (key, bucket) identity."""
     stream = file_replay_source(spark, replay_dir).filter(
@@ -115,24 +115,77 @@ def test_count_window_equivalence(spark, replay_dir):
     )
     out = streaming_count_window(keyed, 10, value_col="value")
     _run_to_memory(out, "t_cw", "append")
-    got = spark.table("t_cw").toPandas().sort_values(["key", "bucket"]).reset_index(drop=True)
+    got = _buckets(spark.table("t_cw"))
 
     ev = load_table(spark, SF_DIR_SMALL, "events")
     batch_keyed = ev.select(
         F.col("user_id").cast("string").alias("key"), "value", "ts", "event_id"
     )
-    want = (
+    want = _buckets(
         windows.count_window_agg(
             batch_keyed, ["key"], 10,
             [windows.exact_sum("value").alias("value"), F.count("*").alias("n")],
-        )
-        .filter(F.col("n") == 10)
-        .toPandas()
-        .sort_values(["key", "bucket"])
-        .reset_index(drop=True)
+        ).filter(F.col("n") == 10)
     )
-    assert len(got) == len(want)
-    assert (got["key"].to_numpy() == want["key"].to_numpy()).all()
+    _assert_same_buckets(got, want)
+
+    # Edge inputs of the hash-group state layout, as BIGINT keys: one
+    # key whose rows span several Arrow chunks of its group (stored in
+    # reverse event order, so a per-chunk sort would bucket them wrong),
+    # and 40 keys sharing the hash group of a NULL key (a NULL widens
+    # the group's BIGINT key column to float in pandas).
+    from sparksent.streaming.count_window import N_GROUPS
+
+    def group(c):
+        return F.pmod(F.xxhash64(c), F.lit(N_GROUPS))
+
+    cand = spark.range(5000).select(F.col("id").alias("k"), group("id").alias("g"))
+    shared = [
+        r.k for r in cand.filter(F.col("g") == group(F.lit(None).cast("long")))
+        .orderBy("k").limit(40).collect()
+    ]
+    keys = [-7] * 57 + [None] * 23
+    keys += [k for i, k in enumerate(shared) for _ in range(10 + i % 13)]
+    rows = [
+        (eid, k, float((eid * 7919) % 1000) / 8.0)
+        for eid, k in enumerate(np.random.default_rng(5).permutation(keys).tolist())
+    ]
+    edge = (
+        spark.createDataFrame(rows[::-1], "event_id long, user_id long, value double")
+        .withColumn("ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("event_id")))
+    )
+    edge_dir = str(tmp_path / "cw_edge_replay")
+    write_replay_chunks(edge, edge_dir, 3)
+    stream = file_replay_source(spark, edge_dir).select(
+        F.col("user_id").alias("key"), "value", "ts", "event_id"
+    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        _run_to_memory(streaming_count_window(stream, 10), "t_cw_edge", "append")
+    finally:
+        spark.conf.set(conf, old)
+    got = _buckets(spark.table("t_cw_edge"))
+    want = _buckets(
+        windows.count_window_agg(
+            edge.select(F.col("user_id").alias("key"), "value", "ts", "event_id"),
+            ["key"], 10,
+            [windows.exact_sum("value").alias("value"), F.count("*").alias("n")],
+        ).filter(F.col("n") == 10)
+    )
+    assert got["key"].isna().sum() == 2 and (got["key"] == -7).sum() == 5
+    _assert_same_buckets(got, want)
+
+
+def _buckets(df):
+    return df.select("key", "bucket", "value").toPandas().sort_values(
+        ["key", "bucket"]).reset_index(drop=True)
+
+
+def _assert_same_buckets(got, want):
+    assert len(got) == len(want) > 0
+    assert got["key"].equals(want["key"])
     assert (got["bucket"].to_numpy() == want["bucket"].to_numpy()).all()
     # streaming sums doubles sequentially; batch accumulates in decimal —
     # equal up to float associativity
@@ -268,17 +321,41 @@ def test_interval_join_equivalence(spark, tmp_path):
 def test_streaming_topology_equivalence(spark, tmp_path):
     """The reference topology end-to-end in streaming mode — raw wire
     lines replayed file-per-microbatch through parse -> NLP -> windowed
-    aggs / count windows — equals the batch topology on the same rows."""
+    aggs / count windows — equals the batch topology on the same rows.
+
+    The fixture text carries no lexicon or entity token, so two more
+    files of lexicon- and entity-bearing lines follow it: without them
+    the topic, entity-opinion and toxic outputs are empty on both sides.
+    """
     from pyspark.sql import types as T
     from sparksent.parse import to_raw_lines
+    from sparksent.streaming.sources import append_flat_file
     from sparksent.tables import messages
     from sparksent.topology import build_streaming_topology, build_topology
 
     msgs = messages(spark, SF_DIR_SMALL)
-    lines = to_raw_lines(msgs)
+    fixture_lines = to_raw_lines(msgs)
 
     replay = str(tmp_path / "lines_replay")
-    write_replay_chunks(lines, replay, N_CHUNKS)
+    write_replay_chunks(fixture_lines, replay, N_CHUNKS)
+    last_s, last_id = fixture_lines.agg(
+        F.max(F.unix_timestamp("ts")), F.max("event_id")
+    ).first()
+    # "troll" posts 12 negative lines: one complete toxic count window
+    texts = ["spark fast", "stream join hash", "table sort dup"]
+    extra = []
+    for f in range(2):
+        rows = [
+            ("view,troll,hash slow scan" if i % 2 else f"view,u{i % 3},{texts[(i + f) % 3]}",
+             last_id + 1 + 12 * f + i)
+            for i in range(12)
+        ]
+        part = spark.createDataFrame(rows, "line string, event_id long").withColumn(
+            "ts", F.timestamp_seconds(F.col("event_id") - last_id + last_s)
+        ).select("line", "ts", "event_id")
+        append_flat_file(part, replay, f"extra_{f}.parquet")
+        extra.append(part)
+    lines = fixture_lines.unionByName(extra[0]).unionByName(extra[1])
     schema = T.StructType(
         [
             T.StructField("line", T.StringType()),
@@ -289,15 +366,16 @@ def test_streaming_topology_equivalence(spark, tmp_path):
     stream = file_replay_source(spark, replay, schema=schema)
     nodes = build_streaming_topology(stream)
 
-    # sentinel lines close every window before the final batch
+    # sentinel lines close every window before the final batch; they
+    # carry an entity token because the entity streams' watermark only
+    # sees entity rows
     for i in range(2):
         row = spark.createDataFrame(
-            [("__sentinel__,-1,", 10**9 + i)], "line string, event_id long"
+            [("__sentinel__,-1,window", 10**9 + i)], "line string, event_id long"
         ).withColumn(
             "ts",
             F.lit(SENTINEL_TS).cast("timestamp") + F.expr(f"INTERVAL {i} SECONDS"),
         ).select("line", "ts", "event_id")
-        from sparksent.streaming.sources import append_flat_file
         append_flat_file(row, replay, f"zz_sentinel_{i}.parquet")
 
     _run_to_memory(nodes["topicStream"], "t_topo_topics", "append")
@@ -309,6 +387,7 @@ def test_streaming_topology_equivalence(spark, tmp_path):
 
     got_topics = spark.table("t_topo_topics").filter(not_sentinel)
     want_topics = batch["topicStream"].select("window_start_s", "key", "count")
+    assert got_topics.count() > 0
     assert got_topics.select(*want_topics.columns).exceptAll(want_topics).count() == 0
     assert want_topics.exceptAll(got_topics.select(*want_topics.columns)).count() == 0
 
@@ -316,6 +395,7 @@ def test_streaming_topology_equivalence(spark, tmp_path):
     want_entop = batch["entityOpinionStream"].select(
         "window_start_s", "key", "value", "moodType"
     )
+    assert got_entop.count() > 0
     assert got_entop.select(*want_entop.columns).exceptAll(want_entop).count() == 0
     assert want_entop.exceptAll(got_entop.select(*want_entop.columns)).count() == 0
 
@@ -329,7 +409,7 @@ def test_streaming_topology_equivalence(spark, tmp_path):
         .select("key", "bucket", "value", "n")
         .toPandas().sort_values(["key", "bucket"]).reset_index(drop=True)
     )
-    assert len(got_toxic) == len(want_toxic)
+    assert len(got_toxic) == len(want_toxic) > 0
     assert (got_toxic["key"].to_numpy() == want_toxic["key"].to_numpy()).all()
     assert np.allclose(
         got_toxic["value"].to_numpy(), want_toxic["value"].to_numpy(), rtol=1e-9
