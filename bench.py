@@ -55,10 +55,12 @@ Methodology (round-3 revision, after the r02 regression diagnosis):
   with_group_prefix_sums over a synthetic constant-plan frame) so the
   mechanism's own cost is tracked directly rather than folded into
   each consumer query's pin (ADVICE r13).
-- Two tiers. HEADLINE is plan-shaped engine queries only — its sum is
-  the reported "value" and the regression-gate metric. CAPABILITY holds
-  queries whose cost is a documented Python/ML constant (applyInPandas
-  escape-hatch proof, in-query LBFGS training); they are still timed
+- Two tiers, both derived from the registry's tags. HEADLINE is every
+  registered query not tagged "capability" — its sum is the reported
+  "value" and the regression-gate metric. CAPABILITY holds the queries
+  tagged "capability", whose cost is a documented Python/ML constant
+  (applyInPandas escape-hatch proof, in-query LBFGS training, the
+  driver-side BPE merge loop); they are still timed
   and reported under "queries" (so per-query history tracks them) but
   excluded from the headline sum, so the gate tracks engine
   regressions, not training constants.
@@ -71,285 +73,14 @@ import os
 import sys
 import time
 
+from sparksent.registry import REGISTRY, queries
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Representative slice of the registry: every operator family, weighted
-# toward the heavy shapes (window aggs, LSH joins, top-k, TPC-H joins).
-HEADLINE = [
-    "window_concat_1s",
-    "topic_count_10s",
-    "trending_10s",
-    "channel_mood_sliding_90_60",
-    "user_mood_cumulative",
-    "toxic_user_cw10",
-    "toxic_user_literal_cw10",
-    "doc_sentiment",
-    "doc_entities",
-    "user_mood_nlp_cumulative",
-    "toxic_user_nlp_cw10",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "similarity_topk_brute",
-    "similarity_topk_lsh",
-    "similarity_topk_ivf",
-    "similarity_topk_multiprobe",
-    "graph_triangle_counts",
-    "text_stats",
-    "text_fingerprint",
-    "json_field_stats",
-    "multimodal_features",
-    "multimodal_image_headers",
-    "multimodal_resize_plan",
-    "multimodal_frame_sample",
-    "tpch_q1_pricing",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping",
-    "tpch_q4_priority_check",
-    "tpch_q5_regional",
-    "tpch_q6_forecast",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q10_returns",
-    "tpch_q11_important_stock",
-    "tpch_q12_late_shipments",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive",
-    "tpch_q20_excess_suppliers",
-    "tpch_q21_waiting_supplier",
-    "tpch_q22_global_sales_opportunity",
-    "semi_late_orders",
-    "outer_order_count_distribution",
-    "fullouter_user_activity",
-    "rollup_event_value",
-    "topn_orders_per_priority",
-    "rangejoin_price_bands",
-    "session_agg_30m",
-    "asof_purchase_last_view",
-    "skew_distinct_users",
-    "percentile_order_value",
-    "pivot_event_counts",
-    "event_gap_stats",
-    "cube_event_value",
-    "hist_event_value",
-    "decile_user_value",
-    "event_session_ids",
-    "cmsketch_heavy_hitters",
-    "seq_packing_512",
-    "seq_packing_bpe_512",
-    "sample_token_budget_bpe",
-    "quality_gate_per_lang_head",
-    "quality_tiers_per_lang",
-    "dedup_cluster_sizes",
-    "dedup_chunks_exact",
-    "bpe_fertility_per_lang",
-    "packing_efficiency_bpe_512",
-    "decontaminate_5gram",
-    "repetition_stats",
-    "rare_word_stats",
-    "text_normalize",
-    "pii_redaction",
-    "boilerplate_removal",
-    "lang_id_confusion",
-    "sample_weighted_tickets",
-    "split_train_valid_test",
-    "anomaly_robust_events",
-    "dedup_ngram_containment",
-    "bloom_semijoin_customers",
-    "quantile_sketch_value",
-    "hll_merge_rollup",
-    "user_behavior_features",
-    "hll_distinct_users",
-    "sample_stratified_events",
-    "embedding_centroids",
-    "embedding_quantize_error",
-    "text_bigram_lift",
-    # round-4 additions
-    "multimodal_decode_pixels",
-    "dedup_tf_cosine",
-    "funnel_view_click_purchase",
-    "retention_cohorts",
-    "event_transition_matrix",
-    "chunk_documents_128_96",
-    "multimodal_decode_audio",
-    "column_stats_events",
-    "weekly_value_wow",
-    # round-5 additions
-    "multimodal_decode_png",
-    "multimodal_decode_gif",
-    "multimodal_decode_jpeg",
-    "multimodal_decode_video",
-    "multimodal_video_index",
-    "bpe_word_vocab",
-    "fuzzy_name_pairs",
-    "lm_bigram_score",
-    "bm25_topk",
-    "ewma_user_value",
-    "attribution_first_touch",
-    "winsorize_event_value",
-    "unpivot_user_metrics",
-    "rolling_60s_user_stats",
-    # round-5 second wave
-    "kmeans_embeddings_2iter",
-    "pagerank_word_graph",
-    "mix_langs_temperature",
-    "scd2_user_event_type",
-    "trend_slope_per_user",
-    "acf_daily_value_lag7",
-    "dedup_prefix_filter",
-    # round-5 fourth wave
-    "basket_pair_lift",
-    "bfs_hops_copurchase",
-    "snapshot_diff_users",
-    "negative_sample_user_items",
-    "grouping_sets_event_stats",
-    "label_propagation_communities",
-    "corr_matrix_event_types",
-    "hard_negatives_topk",
-    "skyline_parts",
-    "drift_binned_ks_value",
-    "zorder_file_stats",
-    "event_ngram_next",
-    "referential_audit",
-    "inverted_index_postings",
-    "dedup_cluster_canonical",
-    "pq_codes_embeddings",
-    "twap_user_value",
-    "rank_normalize_value",
-    "attribution_linear",
-    "ab_test_value_by_variant",
-    "basket_triple_support",
-    "session_path_topk",
-    "entity_resolution_parts",
-    "churn_training_set",
-    "item_similarity_jaccard",
-    "dedup_exact_normalized",
-    "supplier_lead_time",
-    "survival_km_error",
-    "backtest_seasonal_naive",
-    # round-6 additions: registry names that previously had no bench
-    # pin (a regression there was invisible to the BENCH gate) — the
-    # headline tier covers the registry minus the 3 capability-tier
-    # queries.
-    "parse_lines",
-    "window_concat_100s",
-    "toxic_topic_cw25",
-    "toxic_topic_literal_cw25",
-    "toxic_channel_cw50",
-    "toxic_channel_literal_cw50",
-    "category_opinion_cumulative",
-    "entity_opinion_30s",
-    "doc_categories",
-    "anti_customers_no_orders",
-    "setop_user_cohorts",
-    "sample_bernoulli_events",
-    "text_distinctive_terms",
-    "tpch_q7_nation_trade",
-    "tpch_q14_promo",
-    "tpch_q16_supplier_cnt",
-    "dedup_components",
-    "dedup_keep_set",
-    "corpus_curation_pipeline",
-    "doc_sentiment_frozen_margin",
-    "bpe_encode_documents",
-    "semdedup_embeddings",
-    "sample_token_budget",
-    "dedup_cdc_chunks",
-    "daily_median_value",
-    "asof_view_next_purchase",
-    "gopher_quality_gate",
-    "session_concurrency",
-    "hll_sliding_distinct_7d",
-    # round-8 additions
-    "session_concurrency_capped",
-    "dedup_span_8gram",
-    "dsir_importance_weights",
-    "sample_cluster_balanced",
-    # round-9 additions
-    "similarity_topk_ivf_trained",
-    "multimodal_resample_pixels",
-    "multimodal_frame_decode_sampled",
-    "similarity_topk_ivfpq_adc",
-    "similarity_topk_ivfpq_refine",
-    "multimodal_resize_bilinear",
-    # round-10 additions (pinned round 11)
-    "dedup_image_phash",
-    "dedup_span_extents",
-    # round-11 additions
-    "multimodal_embed_topk",
-    "dedup_audio_fingerprint",
-    "dedup_video_framehash",
-    "dedup_multimodal_keep_set",
-    "multimodal_quality_gate",
-    "dedup_winnowing",
-    "similarity_topk_sq8",
-    "dedup_span_rewrite",
-    "graph_kcore_parts",
-    "epoch_shuffle_batches",
-    "decontaminate_semantic",
-    "kmv_intersection_users",
-    "k_anonymity_audit",
-    "theilsen_slope_per_user",
-    # round-12 additions
-    "sample_domain_quota",
-    # round-14 additions
-    "url_canonicalize",
-    "url_domain_topk",
-    "dedup_url_exact",
-    "sample_domain_quota_canonical",
-    "retrieval_rrf_fusion",
-    "curriculum_quality_phases",
-    "dedup_chunks_minhash",
-    "warc_parse_records",
-    "robots_disallow_audit",
-    # round-15 additions
-    "url_registrable_domain",
-    "sample_domain_quota_registrable",
-    "html_extract_text",
-    "warc_parse_gzip",
-    "write_training_shards",
-    "quality_gate_extracted",
-    "html_link_graph",
-    "robots_txt_parse",
-    "robots_audit_parsed",
-    "sitemap_parse",
-    "url_frontier",
-    # round-16 additions
-    "http_parse_response",
-    "charset_quality_gate",
-    "web_pipeline_warc_to_shards",
-    "unigram_seed_vocab",
-    "unigram_encode_viterbi",
-    "unigram_em_reestimate",
-    "frontier_politeness",
-    # round-16 second wave
-    "crawl_snapshot_delta",
-    "host_pagerank",
-    "wordpiece_vocab",
-    "wordpiece_encode",
-    "quality_probe_train",
-    "quality_probe_score",
-    "kn_trigram_perplexity",
-    "frontier_authority",
-    # round-16 third wave
-    "host_hits",
-    "anchor_text_index",
-    "tokenizer_fertility_compare",
-    "bitext_mine_margin",
-    "domain_reweight_excess_loss",
-]
-
-# Timed and reported, but excluded from the headline sum: cost dominated
-# by a documented non-engine constant (see module docstring).
-CAPABILITY = [
-    "grouped_mode_event_type",  # deliberate applyInPandas escape-hatch proof
-    "doc_sentiment_mllib",  # in-query LBFGS training (maxIter=16)
-    "bpe_merges",  # driver-side merge loop over the collected vocab
-]
+# Every registered query is timed, in queries() order; the two tiers
+# come from the "capability" tag (module docstring).
+CAPABILITY = [n for n in queries() if "capability" in REGISTRY[n].tags]
+HEADLINE = [n for n in queries() if n not in CAPABILITY]
 
 
 def _run(qs, name: str) -> float:
@@ -454,7 +185,6 @@ def main() -> None:
     from pyspark.sql.functions import xxhash64 as F_xxhash64
 
     from sparksent.session import get_spark
-    from sparksent.registry import queries
 
     SPARK = get_spark("sparksent-bench")
     qs = queries()

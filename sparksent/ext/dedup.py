@@ -15,11 +15,9 @@ shingle-based Jaccard), all expressed as declarative DataFrame plans:
                      distance <=3 cannot change all four bytes), then
                      exact hamming filter via bit_count(xor).
 - ngram_jaccard_pairs: shingle inverted index -> per-pair intersection
-                     counts -> exact Jaccard >= threshold. With a df
-                     cap the pair stage expands C(n,2) pairs map-side
-                     from sorted per-bucket id arrays (one index
-                     shuffle, no join operator); uncapped it falls back
-                     to the self-join (see _pair_intersections).
+                     counts (an index self-join on the shingle, see
+                     _pair_intersections) -> exact Jaccard >= threshold,
+                     with or without a df cap.
 
 Scale notes: every strategy shuffles on a *bucket key* (fingerprint,
 band signature, byte value, shingle) so the pairwise stage only sees
@@ -410,7 +408,7 @@ def ngram_jaccard_pairs(
     # scans for 1 — the standard multi-consumer persist.
     sh = sh.localCheckpoint()
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    inter = _pair_intersections(sh, bounded=False)
+    inter = _pair_intersections(sh)
     return (
         inter.join(sizes.withColumnsRenamed({"id": "id_a", "n_sh": "n_a"}), "id_a")
         .join(sizes.withColumnsRenamed({"id": "id_b", "n_sh": "n_b"}), "id_b")
@@ -422,50 +420,12 @@ def ngram_jaccard_pairs(
     )
 
 
-def _pair_intersections(sh: DataFrame, bounded: bool) -> DataFrame:
+def _pair_intersections(sh: DataFrame) -> DataFrame:
     """(id_a < id_b, inter) pair intersection counts from an (id,
-    shingle) inverted index with distinct rows per document.
-
-    Two physical strategies for the same result, A/B-measured at the
-    20x corpus (100k docs, cap 25) in round 4:
-
-    - ``bounded=False`` (the DEFAULT, used by every registered query):
-      the classic self-join. 234 MB total shuffle; wall 9.9/9.4 s
-      (jaccard/containment). Degrades gracefully without a df cap (AQE
-      splits skewed join partitions; no per-task array).
-    - ``bounded=True`` (requires a df cap so every posting list is
-      small): group the index by shingle into a sorted id array and
-      expand the C(n,2) pairs MAP-SIDE with one higher-order transform
-      — no join operator at all. Wall 8.6-10.8 s (similar-to-better
-      locally) but 419 MB total shuffle — 1.8x the bytes, because the
-      join form pipelines its pair partial-aggregate inside the join
-      stage while this form pays a full exchange of raw pair rows.
-      Local mode hides network, so on a REAL cluster the join form's
-      byte advantage wins; kept as the measured alternative (identical
-      output pinned by test) for single-node deployments where the
-      join build/probe dominates.
-    """
-    if bounded:
-        buckets = sh.groupBy("shingle").agg(
-            F.sort_array(F.collect_list("id")).alias("ids")
-        )
-        pairs = buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("p")
-        ).select("p.id_a", "p.id_b")
-        # The join form's id_a < id_b filter silently drops self-pairs; a
-        # duplicate id within one posting list (caller passing a
-        # non-distinct index, or an h60 collision of two shingles in one
-        # doc) would make the sorted-array expansion emit id_a == id_b
-        # and diverge from the join strategy.  Match the invariant
-        # explicitly — the filter is map-side and free.
-        pairs = pairs.filter(F.col("id_a") < F.col("id_b"))
-        return pairs.groupBy("id_a", "id_b").agg(F.count("*").alias("inter"))
+    shingle) inverted index with distinct rows per document: the
+    inverted-index self-join.  The pair partial-aggregate pipelines
+    inside the join stage, and AQE splits skewed join partitions, so it
+    degrades gracefully without a df cap."""
     left = sh.select(F.col("id").alias("id_a"), "shingle")
     right = sh.select(F.col("id").alias("id_b"), "shingle")
     return (
@@ -541,7 +501,7 @@ def ngram_containment_pairs(
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
     sh = sh.localCheckpoint()
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    inter = _pair_intersections(sh, bounded=False)
+    inter = _pair_intersections(sh)
     return (
         inter.join(sizes.withColumnsRenamed({"id": "id_a", "n_sh": "n_a"}), "id_a")
         .join(sizes.withColumnsRenamed({"id": "id_b", "n_sh": "n_b"}), "id_b")

@@ -696,7 +696,9 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "grouped_mode_event_type",
     oracle=grouped.grouped_mode_sql(),
-    tags=("ext", "grouped"),
+    # capability: bench.py times it outside the headline sum — a
+    # deliberate applyInPandas escape-hatch proof
+    tags=("ext", "grouped", "capability"),
 )
 def q_grouped_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user modal event type via Arrow-batched applyInPandas,
@@ -1371,7 +1373,13 @@ def q_bpe_word_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe.word_vocab_capped(_docs(spark, sf_dir), min_count=2, max_vocab=1000)
 
 
-@register("bpe_merges", oracle=bpe.merges_sql(), tags=("ext", "tokenizer"))
+@register(
+    "bpe_merges",
+    oracle=bpe.merges_sql(),
+    # capability: bench.py times it outside the headline sum — a
+    # driver-side merge loop over the collected vocab
+    tags=("ext", "tokenizer", "capability"),
+)
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer training: distributed word-vocabulary count (the
     only corpus-sized stage), then the canonical deterministic merge

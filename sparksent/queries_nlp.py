@@ -377,7 +377,9 @@ def q_toxic_user_nlp(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN {nlp.score_raw_sql()} > 0 THEN 1.0 ELSE 0.0 END AS prediction
     FROM documents
     """,
-    tags=("nlp", "mllib"),
+    # capability: bench.py times it outside the headline sum — in-query
+    # LBFGS training
+    tags=("nlp", "mllib", "capability"),
 )
 def q_doc_sentiment_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer -> HashingTF -> LogisticRegression pipeline trained on

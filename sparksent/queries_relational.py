@@ -534,8 +534,8 @@ def q_session_concurrency_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
       every shuffle-map task emits at most CAP rows per session seen,
       so the rank shuffle carries ≤ S×CAP rows no matter how dense the
       overlap graph gets — sub-linear in output density where the
-      exact form is linear (measured, SCALE.md round-8 section /
-      tools/scale_concurrency.py: at ×20 density, same session, exact
+      exact form is linear (measured, SCALE.md "Round 8: capped
+      concurrency measured" section: at ×20 density, same session, exact
       38.0 s / 3,185 MB shuffle vs capped 23.9 s / 510 MB — the
       157 M-pair distinct shuffle is gone and the residual shuffle is
       the sessionization both forms pay);

@@ -234,8 +234,8 @@ def neardup_admit_batch(
     touched and the loop degrades to a full index read+rewrite per
     batch (the round-9 append-only behavior).  Size n_buckets at seed
     time from the expected batch size AND corpus size so buckets stay
-    a bounded number of MB — measured in SCALE.md's round-11
-    admission-loop section (`tools/scale_r9.py admission`): at x20,
+    a bounded number of MB — measured in SCALE.md's "Round 11:
+    bucketed admission index" section: at x20,
     100-doc batches against n_buckets=4096 touch ~9% of buckets —
     ~22 MB input/batch, FLAT as the index grows — vs ~236 MB/batch for
     1,000-doc batches against 64 buckets, where every bucket is

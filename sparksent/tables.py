@@ -190,16 +190,6 @@ def cached_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     return _COUNT_CACHE[key]
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for the SQL API)."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference-shaped message stream derived from ``events``.
 

@@ -13,6 +13,7 @@ alerting path (SentimentAnalysis.scala:304-311):
 This module reproduces them as *batch* DataFrame transformations over an
 explicit event-time column (the reference used implicit processing time —
 SURVEY.md §2.6; event time is the deterministic, testable superset).
+The timing dispatch among the first three is ``pipeline.mood_stream``.
 ``sparksent.streaming`` wraps the same shapes for Structured Streaming.
 
 Scale notes (100 TB posture):
@@ -195,28 +196,3 @@ def session_agg(
         .withColumn("session_start_us", F.unix_micros(F.col("sw.start")))
         .drop("sw")
     )
-
-
-def windowed_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    timings: tuple[int, int],
-    aggs: Sequence[Column],
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_cols: Sequence[str] = ("ts", "event_id"),
-    gap_s: int | None = None,
-) -> DataFrame:
-    """The ``processChatStream`` dispatcher (SA.scala:269-287): timings
-    ``(t, 0)`` -> tumbling t-second window; ``(t1, t2)`` -> sliding
-    t1-size/t2-slide; ``(0, 0)`` -> unbounded running reduce (cumulative
-    sum of ``value_col``). ``gap_s`` (an extension beyond the
-    reference's three regimes) dispatches to session windows instead."""
-    if gap_s is not None:
-        return session_agg(df, keys, gap_s, aggs, ts_col)
-    t1, t2 = timings
-    if t1 == 0 and t2 == 0:
-        return cumulative_agg(df, keys, value_col, order_cols)
-    if t2 == 0:
-        return tumbling_agg(df, keys, t1, aggs, ts_col)
-    return sliding_agg(df, keys, t1, t2, aggs, ts_col)

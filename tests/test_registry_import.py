@@ -39,19 +39,23 @@ def test_registry_full_surface_loads():
 
 
 def test_bench_names_are_registered():
-    """bench.py's HEADLINE/CAPABILITY lists are plain strings, so a typo
-    (or a renamed query) would crash the driver's BENCH run at timing
-    time — the one artifact pytest otherwise never exercises.  Pin:
-    every benched name resolves in the registry, and every registered
-    query is either benched or deliberately absent from both tiers."""
+    """bench.py derives HEADLINE/CAPABILITY from the registry's
+    "capability" tag, so a renamed query or a dropped tag would silently
+    move a query into the headline sum.  Pin: the capability tier is
+    exactly the three documented names, the tiers are disjoint, and
+    together they are queries() in order."""
     import bench
     from sparksent.registry import queries
 
-    qs = queries()
-    benched = set(bench.HEADLINE) | set(bench.CAPABILITY)
-    missing = benched - set(qs)
-    assert not missing, f"bench names not in registry: {sorted(missing)}"
-    assert len(bench.HEADLINE) == len(set(bench.HEADLINE))  # no dupes
+    qs = list(queries())
+    assert set(bench.CAPABILITY) == {
+        "grouped_mode_event_type",
+        "doc_sentiment_mllib",
+        "bpe_merges",
+    }
+    assert not set(bench.HEADLINE) & set(bench.CAPABILITY)
+    assert sorted(bench.HEADLINE + bench.CAPABILITY) == sorted(qs)
+    assert bench.HEADLINE == [n for n in qs if n not in bench.CAPABILITY]
 
 
 def test_every_registered_query_is_benched_and_pinned():

@@ -41,51 +41,6 @@ def test_salted_concat_equals_direct(spark):
     assert direct.exceptAll(got).count() == 0
 
 
-def test_pair_intersection_strategies_identical(spark):
-    """The map-side bucket-pair expansion (bounded=True) and the classic
-    inverted-index self-join produce the identical (id_a, id_b, inter)
-    set — the documented single-node/cluster trade in
-    dedup._pair_intersections is purely physical."""
-    from pyspark.sql import functions as F
-
-    from sparksent.ext.dedup import _pair_intersections
-    from sparksent.ext.hashing import h60, shingles
-    from sparksent.tables import load_table
-
-    docs = load_table(spark, SF_DIR_SMALL, "documents")
-    sh = (
-        docs.select(F.col("doc_id").alias("id"), F.explode(shingles("text")).alias("g"))
-        .select("id", h60("g").alias("shingle"))
-    )
-    a = _pair_intersections(sh, bounded=True).toPandas()
-    b = _pair_intersections(sh, bounded=False).toPandas()
-    a = a.sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    b = b.sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    assert len(a) == len(b)
-    assert (a.to_numpy() == b.to_numpy()).all()
-
-
-def test_pair_intersection_bounded_drops_self_pairs(spark):
-    """A duplicate id within one posting list (h60 collision of two
-    shingles in one doc, or a caller passing a non-distinct index) must
-    not emit an id_a == id_b self-pair from the bounded expansion — the
-    join form's id_a < id_b filter drops it, and the two strategies must
-    stay identical."""
-    from sparksent.ext.dedup import _pair_intersections
-
-    sh = spark.createDataFrame(
-        # doc 1 holds shingle 100 TWICE (the collision case); doc 2 once
-        [(1, 100), (1, 100), (2, 100), (1, 200), (2, 200)],
-        "id long, shingle long",
-    )
-    a = _pair_intersections(sh, bounded=True).toPandas()
-    b = _pair_intersections(sh, bounded=False).toPandas()
-    assert (a["id_a"] < a["id_b"]).all()
-    a = a.sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    b = b.sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    assert (a.to_numpy() == b.to_numpy()).all()
-
-
 def test_global_ranks_match_single_reducer_window(spark):
     """Distributed global row numbers (range partition + offset) equal
     the single-reducer Window.orderBy row_number, and the integer NTILE
