@@ -267,13 +267,6 @@ def _synth_payload_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataF
         )
 
 
-def image_media_from_documents(docs: DataFrame) -> DataFrame:
-    """documents -> (media_id, payload BINARY) with real PNG/JPEG/GIF
-    header bytes (format/dims deterministic in doc_id)."""
-    narrow = rebalance(docs.select(F.col("doc_id").alias("media_id"), "text"))
-    return narrow.mapInPandas(_synth_payload_batches, "media_id long, payload binary")
-
-
 def _synth_then_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Fused synth+decode: one Python worker round-trip instead of two
     (one Arrow ship of the text in, headers out — the payload bytes
@@ -284,9 +277,8 @@ def _synth_then_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
 
 def extract_image_headers(docs: DataFrame) -> DataFrame:
     """End-to-end: synthesize payloads, then DECODE the real bytes back.
-    The two stages fuse into one mapInPandas (a separate-stage variant
-    exists via image_media_from_documents + decode_image_headers and is
-    what a real pipeline with a stored media table would run)."""
+    The two stages fuse into one mapInPandas; a pipeline with a stored
+    media table would run ``decode_image_headers`` over it directly."""
     narrow = rebalance(docs.select(F.col("doc_id").alias("media_id"), "text"))
     return narrow.mapInPandas(_synth_then_decode, HEADER_SCHEMA)
 

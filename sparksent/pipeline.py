@@ -29,6 +29,23 @@ from .windows import (
 )
 
 # ---------------------------------------------------------------------------
+# windowed text concatenation (SA.scala:44-52, 289-302)
+# ---------------------------------------------------------------------------
+
+
+def window_concat_text() -> Column:
+    """parsedStream / aggregateStream's window aggregate: the window's
+    texts in (ts, event_id) order, joined by newlines, as ``text``."""
+    return F.array_join(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("ts", "event_id", "text"))),
+            lambda x: x["text"],
+        ),
+        "\n",
+    ).alias("text")
+
+
+# ---------------------------------------------------------------------------
 # mood (SA.scala:243-267)
 # ---------------------------------------------------------------------------
 

@@ -22,18 +22,6 @@ from .registry import register
 # ---------------------------------------------------------------------------
 
 
-def nlp_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's message stream with real text: events enriched by
-    a broadcast join to documents (channel <- event_type, user <-
-    user_id, text <- documents.text)."""
-    ev = tables.load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", F.col("user_id").cast("string").alias("user"),
-        F.col("event_type").alias("channel"),
-    )
-    docs = tables.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return ev.join(F.broadcast(docs), ev.event_id % 500 == docs.doc_id).drop("doc_id")
-
-
 def _events_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tables.load_table(spark, sf_dir, "events").select(
         "event_id", "ts", F.col("user_id").cast("string").alias("user"),
@@ -53,9 +41,10 @@ def scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def nlp_messages_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events broadcast-joined to pre-scored documents: same columns as
-    ``nlp.with_sentiment(nlp_messages(...))`` with the per-event scoring
-    hoisted onto the dimension."""
+    """The reference's message stream with real text — events (channel
+    <- event_type, user <- user_id) broadcast-joined to sentiment-scored
+    documents on ``doc_id = event_id % 500``. Scoring runs on the
+    dimension, once per document, not once per event."""
     ev = _events_keyed(spark, sf_dir)
     return ev.join(F.broadcast(scored_docs(spark, sf_dir)), "doc_id").drop("doc_id")
 

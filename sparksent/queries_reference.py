@@ -49,13 +49,7 @@ def q_parse_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _window_concat(spark: SparkSession, sf_dir: str, size_s: int) -> DataFrame:
     msgs = tables.messages(spark, sf_dir)
-    concat = F.array_join(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("ts", "event_id", "text"))),
-            lambda x: x["text"],
-        ),
-        "\n",
-    ).alias("text")
+    concat = pipeline.window_concat_text()
     return windows.tumbling_agg(msgs, ["channel", "user"], size_s, [concat])
 
 

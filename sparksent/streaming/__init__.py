@@ -7,10 +7,16 @@ code: the :mod:`sparksent.windows` / :mod:`sparksent.nlp` /
 DataFrame. This package holds the parts that ARE streaming-specific:
 
 - sources.py: socket (the reference's ingest, SA.scala:41), file-replay
-  (deterministic testing), rate (load generation)
+  (deterministic testing)
 - ops.py:     watermarked windowed aggregation + update-mode cumulative
-- count_window.py: the one genuinely stateful custom operator
-  (countWindow(N).sum, SA.scala:304-311) via applyInPandasWithState
+- count_window.py: ``ordered_fold``, the one arbitrary stateful operator
+  (applyInPandasWithState) every ordered per-group operator is a pure
+  ``step`` over: the count window (countWindow(N).sum, SA.scala:304-311)
+  and the per-record cumulative, transition, EWMA, rolling-window, SCD2,
+  n-gram and space-saving operators
+- quota.py:   per-group domain-quota and token-budget admission, FCFS
+  (an ``ordered_fold``) and watermark-windowed (its own event-time
+  timeout function); a domain quota is a unit-cost token budget
 - sinks.py:   console (the reference's only sink), memory (tests),
   parquet, foreachBatch
 - neardup.py: incremental new-vs-corpus MinHash dedup (stream-static
@@ -64,7 +70,7 @@ from .quota import (  # noqa: F401
     streaming_token_budget,
     streaming_token_budget_windowed,
 )
-from .sources import file_replay_source, kafka_lines, rate_events, socket_lines  # noqa: F401
+from .sources import file_replay_source, kafka_lines, socket_lines  # noqa: F401
 from .sinks import (  # noqa: F401
     compact_bucketed_store,
     parquet_keyed_merge,

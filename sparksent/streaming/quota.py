@@ -1,6 +1,18 @@
-"""Streaming per-domain quota admission — the streaming dual of
-``ext/curation.sample_domain_quota`` (the RefinedWeb/C4-style
-per-source frequency cap, round 12).
+"""Streaming per-domain quota and token-budget admission — the
+streaming duals of ``ext/curation.sample_domain_quota`` (the
+RefinedWeb/C4-style per-source frequency cap, round 12) and
+``ext/curation.sample_token_budget``.
+
+A domain quota is a token budget in which every document costs one
+token: with unit cost, "the exclusive prior admitted sum is under
+``cap``" is exactly "fewer than ``cap`` admitted", and the running
+admitted count ``rk`` is the prior sum + 1. So the module has two
+admission state machines — :func:`_admit` (first-come-first-served, an
+:func:`~sparksent.streaming.count_window.ordered_fold`) and
+:func:`_admit_windowed` (watermark-closed windows) — and the four public
+functions are thin callers that differ in the token counts they feed,
+their lottery salt (``"domquota:"`` / ``"tokbudget:"``, shared with the
+batch duals and their DuckDB oracles) and their output projection.
 
 Semantic difference, stated honestly: the BATCH operator ranks every
 document by the md5 lottery over the WHOLE corpus and keeps each
@@ -19,6 +31,12 @@ partitioned with the shuffle); each micro-batch shuffles only its own
 rows on ``group_col``.  A saturated source costs one counter
 comparison per arriving row — the stream-side analog of the batch
 WindowGroupLimit bound.
+
+Checkpoints: the pending buffer of :func:`streaming_domain_quota_windowed`
+carries each row's token count (``p_tok``, always 1) like the token-budget
+variant's, so its checkpoints written by the separate domain-quota state
+machine of earlier versions cannot be restored (the state schema
+differs).
 """
 
 from __future__ import annotations
@@ -27,17 +45,14 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..ext.curation import DOMAIN_QUOTA, TOKEN_BUDGET
 from ..ext.hashing import h60
-
-
-def _field(df: DataFrame, name: str) -> T.StructField:
-    return T.StructField(name, df.schema[name].dataType)
+from .count_window import _field, ordered_fold
 
 
 def _py(v):
@@ -45,6 +60,188 @@ def _py(v):
     (state.update rejects numpy types); str/None and other natives
     pass through."""
     return v.item() if hasattr(v, "item") else v
+
+
+def _lottery(salt: str, id_col: str) -> Column:
+    return h60(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+
+
+def _rank() -> Column:
+    """A unit-cost admission's running admitted count, 1..cap."""
+    return (F.col("prior_tokens") + 1).alias("rk")
+
+
+def _token_counts(df: DataFrame, text_col: str) -> Column:
+    """``n_tokens`` as the frame already carries it, else the batch
+    operator's whitespace count — computed in-plan, before the stateful
+    shuffle."""
+    if "n_tokens" in df.columns:
+        n = F.col("n_tokens")
+    else:
+        n = F.size(F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit("")))
+    return n.cast("long").alias("n_tokens")
+
+
+def _admit(
+    counted: DataFrame, salt: str, budget: int, group_col: str, id_col: str
+) -> DataFrame:
+    """FCFS admission over (id, group, n_tokens) rows: per group and
+    micro-batch, rows in (lottery, id) order admit while the group's
+    EXCLUSIVE prior admitted token sum is under ``budget``. Emits (id,
+    group, n_tokens, prior_tokens); state is that one BIGINT sum."""
+    tagged = counted.withColumn("lottery", _lottery(salt, id_col))
+    cols = [id_col, group_col, "n_tokens", "prior_tokens"]
+    out_schema = T.StructType(
+        [
+            _field(tagged, id_col),
+            _field(tagged, group_col),
+            T.StructField("n_tokens", T.LongType()),
+            T.StructField("prior_tokens", T.LongType()),
+        ]
+    )
+    state_schema = T.StructType([T.StructField("tok_sum", T.LongType())])
+
+    def step(key: tuple, state: tuple, pdf: pd.DataFrame):
+        (tok_sum,) = state
+        out: list[tuple] = []
+        for doc, n_tok in zip(pdf[id_col].to_numpy(), pdf["n_tokens"].to_numpy()):
+            if tok_sum >= budget:
+                break
+            out.append((doc, key[0], int(n_tok), tok_sum))
+            tok_sum += int(n_tok)
+        return (tok_sum,), pd.DataFrame(out, columns=cols) if out else None
+
+    return ordered_fold(
+        tagged, group_col, ("lottery", id_col), out_schema, state_schema, (0,), step
+    )
+
+
+def _admit_windowed(
+    counted: DataFrame,
+    salt: str,
+    budget: int,
+    group_col: str,
+    id_col: str,
+    ts_col: str,
+    window_dur: str,
+    lateness: str,
+) -> DataFrame:
+    """Windowed admission over (id, group, ts, n_tokens) rows: rows
+    buffer per group until the watermark closes their tumbling window,
+    then admit in (window_start, lottery, id) order while the group's
+    EXCLUSIVE prior admitted token sum is under ``budget``. Emits (id,
+    group, window_start, n_tokens, prior_tokens).
+
+    Not an ``ordered_fold``: timed-out calls carry no rows, the late-row
+    filter runs per chunk, and the function re-arms an event-time
+    timeout."""
+    tagged = (
+        counted.withWatermark(ts_col, lateness)
+        .withColumn("win", F.window(ts_col, window_dur))
+        .withColumn("ws", F.col("win.start").cast("long"))
+        .withColumn("we", F.col("win.end").cast("long"))
+        .withColumn("lottery", _lottery(salt, id_col))
+        .drop("win")
+    )
+    # (window_dur is validated by F.window at analysis time)
+    # window_start crosses the Arrow boundary as epoch SECONDS (long)
+    # and becomes a timestamp via an in-plan cast below: a naive
+    # datetime built in the Python worker would be re-interpreted in
+    # the session TZ (the oracle-exactness TZ hazard), while
+    # long -> timestamp is a TZ-independent instant.
+    out_schema = T.StructType(
+        [
+            _field(tagged, id_col),
+            _field(tagged, group_col),
+            T.StructField("ws_epoch", T.LongType()),
+            T.StructField("n_tokens", T.LongType()),
+            T.StructField("prior_tokens", T.LongType()),
+        ]
+    )
+    # the pending-id buffer's element type follows the frame's actual
+    # id type (ADVICE r13: a hardcoded LongType analyzed fine for any
+    # id but failed at state.update on the first buffered non-long id)
+    state_schema = T.StructType(
+        [
+            T.StructField("tok_sum", T.LongType()),
+            T.StructField("p_ws", T.ArrayType(T.LongType())),
+            T.StructField("p_we", T.ArrayType(T.LongType())),
+            T.StructField("p_lot", T.ArrayType(T.LongType())),
+            T.StructField("p_id", T.ArrayType(tagged.schema[id_col].dataType)),
+            T.StructField("p_tok", T.ArrayType(T.LongType())),
+        ]
+    )
+
+    def fn(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            tok_sum, p_ws, p_we, p_lot, p_id, p_tok = state.get
+            pend = [
+                list(x)
+                for x in (p_ws or [], p_we or [], p_lot or [], p_id or [], p_tok or [])
+            ]
+        else:
+            tok_sum, pend = 0, [[], [], [], [], []]
+        wm_sec = state.getCurrentWatermarkMs() // 1000
+        if not state.hasTimedOut:
+            # EXPLICIT late-row drop, gated on the CURRENT watermark
+            # (measured in the beyond-lateness test:
+            # applyInPandasWithState hands the function ALL arriving
+            # rows — Spark's below-watermark input filter covers
+            # streaming aggregations, not arbitrary stateful ops).  A
+            # row whose window end <= the invocation's watermark is
+            # beyond the lateness bound by definition — a streaming
+            # aggregation would drop it too — and its window either
+            # already flushed or flushes THIS invocation from rows
+            # that arrived in time; admitting a late straggler now
+            # would hand it a rank its window's admission pass never
+            # saw.  In-bound rows (we > watermark) always buffer,
+            # whatever micro-batch they land in — which is what makes
+            # the admitted set a pure function of the data for any
+            # arrival order within the bound.
+            for chunk in pdfs:
+                if not len(chunk):
+                    continue
+                ok = chunk[chunk["we"].to_numpy() > wm_sec]
+                pend[0].extend(int(v) for v in ok["ws"].to_numpy())
+                pend[1].extend(int(v) for v in ok["we"].to_numpy())
+                pend[2].extend(int(v) for v in ok["lottery"].to_numpy())
+                pend[3].extend(_py(v) for v in ok[id_col].to_numpy())
+                pend[4].extend(int(v) for v in ok["n_tokens"].to_numpy())
+        rows = sorted(zip(*pend))  # (ws, we, lottery, id, n_tok):
+        # window order, then lottery within the window — the admission
+        # priority
+        out: list[tuple] = []
+        keep: list[tuple] = []
+        for ws, we, lo, doc, n_tok in rows:
+            if we <= wm_sec:  # window closed: admit now, in order
+                if tok_sum < budget:
+                    out.append((doc, key[0], ws, n_tok, tok_sum))
+                    tok_sum += n_tok
+            else:
+                keep.append((ws, we, lo, doc, n_tok))
+        state.update((tok_sum, *([r[i] for r in keep] for i in range(5))))
+        if keep:
+            # wake this group when the watermark passes the earliest
+            # open window, even with no new arrivals
+            state.setTimeoutTimestamp(min(r[1] for r in keep) * 1000)
+        if out:
+            yield pd.DataFrame(
+                out,
+                columns=[id_col, group_col, "ws_epoch", "n_tokens", "prior_tokens"],
+            )
+
+    admitted = tagged.groupBy(group_col).applyInPandasWithState(
+        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
+    )
+    return admitted.select(
+        id_col,
+        group_col,
+        F.col("ws_epoch").cast("timestamp").alias("window_start"),
+        "n_tokens",
+        "prior_tokens",
+    )
 
 
 def streaming_domain_quota(
@@ -62,39 +259,9 @@ def streaming_domain_quota(
     while the per-source counter is below ``cap``.  State is one
     counter per source; rows after saturation are dropped (never
     emitted), which is the point of the cap."""
-    lot = h60(F.concat(F.lit("domquota:"), F.col(id_col).cast("string")))
-    tagged = df.select(id_col, group_col).withColumn("lottery", lot)
-    out_schema = T.StructType(
-        [
-            _field(tagged, id_col),
-            _field(tagged, group_col),
-            T.StructField("rk", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("admitted", T.LongType())])
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (admitted,) = state.get if state.exists else (0,)
-        out: list[tuple] = []
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            # concat BEFORE the sort: a group's batch rows can span
-            # Arrow chunks (the count_window lesson)
-            pdf = pd.concat(chunks).sort_values(["lottery", id_col])
-            for doc in pdf[id_col].to_numpy():
-                if admitted >= cap:
-                    break
-                admitted += 1
-                out.append((doc, key[0], admitted))
-        state.update((admitted,))
-        if out:
-            yield pd.DataFrame(out, columns=[id_col, group_col, "rk"])
-
-    return tagged.groupBy(group_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    counted = df.select(id_col, group_col, F.lit(1).cast("long").alias("n_tokens"))
+    admitted = _admit(counted, "domquota:", cap, group_col, id_col)
+    return admitted.select(id_col, group_col, _rank())
 
 
 def streaming_token_budget(
@@ -126,61 +293,14 @@ def streaming_token_budget(
     state function only compares and adds.  For learned-subword
     budgets, pre-compute counts (e.g. ``bpe.encode_token_counts`` over
     a static merge table) and feed a frame that already carries
-    ``n_tokens``; this function then skips its own count expression.
+    ``n_tokens``; this function then skips its own count expression
+    (both token-budget variants share this rule).
 
     Scale: state is ONE BIGINT sum per group; each micro-batch
     shuffles only its own rows on ``group_col``; a saturated group
     costs one comparison per arriving row."""
-    lot = h60(F.concat(F.lit("tokbudget:"), F.col(id_col).cast("string")))
-    if "n_tokens" in df.columns:
-        tagged = df.select(id_col, group_col, "n_tokens")
-    else:
-        tagged = df.select(
-            id_col,
-            group_col,
-            F.size(
-                F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
-            )
-            .cast("long")
-            .alias("n_tokens"),
-        )
-    tagged = tagged.withColumn("lottery", lot)
-    out_schema = T.StructType(
-        [
-            _field(tagged, id_col),
-            _field(tagged, group_col),
-            T.StructField("n_tokens", T.LongType()),
-            T.StructField("prior_tokens", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("tok_sum", T.LongType())])
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (tok_sum,) = state.get if state.exists else (0,)
-        out: list[tuple] = []
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            # concat BEFORE the sort: a group's batch rows can span
-            # Arrow chunks (the count_window lesson)
-            pdf = pd.concat(chunks).sort_values(["lottery", id_col])
-            for doc, n_tok in zip(
-                pdf[id_col].to_numpy(), pdf["n_tokens"].to_numpy()
-            ):
-                if tok_sum >= budget:
-                    break
-                out.append((doc, key[0], int(n_tok), tok_sum))
-                tok_sum += int(n_tok)
-        state.update((tok_sum,))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[id_col, group_col, "n_tokens", "prior_tokens"]
-            )
-
-    return tagged.groupBy(group_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    counted = df.select(id_col, group_col, _token_counts(df, text_col))
+    return _admit(counted, "tokbudget:", budget, group_col, id_col)
 
 
 def streaming_domain_quota_windowed(
@@ -217,7 +337,8 @@ def streaming_domain_quota_windowed(
     watermark when it arrives is DROPPED — explicitly, in the
     operator, because applyInPandasWithState receives all arriving
     rows (Spark's late-row filter covers streaming aggregations, not
-    arbitrary stateful ops — measured, see the in-function comment);
+    arbitrary stateful ops — measured, see the comment in
+    :func:`_admit_windowed`);
     it is beyond the lateness bound and its window's admission pass
     runs (or ran) without it, the bounded-lateness trade, pinned by
     the beyond-lateness test;
@@ -225,7 +346,7 @@ def streaming_domain_quota_windowed(
     final windows of a finite replay need one later event to push the
     watermark (live streams always advance; the tests append a
     sentinel chunk).  State per source is the admitted counter plus
-    the CURRENTLY OPEN windows' (window, lottery, id) triples — the
+    the CURRENTLY OPEN windows' (window, lottery, id, n_tokens=1) rows — the
     in-flight buffer is bounded by arrival rate x (window + lateness),
     the classic watermark state bound, partitioned with the shuffle.
 
@@ -241,114 +362,13 @@ def streaming_domain_quota_windowed(
     above); pinned by tests/test_streaming_equivalence.py::
     test_epoch_zero_event_time_edge.  Real streams never carry
     1970-01-01T00:00:00.000 exactly."""
-    lot = h60(F.concat(F.lit("domquota:"), F.col(id_col).cast("string")))
-    tagged = (
-        df.select(id_col, group_col, ts_col)
-        .withWatermark(ts_col, lateness)
-        .withColumn("win", F.window(ts_col, window_dur))
-        .withColumn("ws", F.col("win.start").cast("long"))
-        .withColumn("we", F.col("win.end").cast("long"))
-        .withColumn("lottery", lot)
-        .drop("win")
+    counted = df.select(
+        id_col, group_col, ts_col, F.lit(1).cast("long").alias("n_tokens")
     )
-    # (window_dur is validated by F.window at analysis time)
-    # window_start crosses the Arrow boundary as epoch SECONDS (long)
-    # and becomes a timestamp via an in-plan cast below: a naive
-    # datetime built in the Python worker would be re-interpreted in
-    # the session TZ (the oracle-exactness TZ hazard), while
-    # long -> timestamp is a TZ-independent instant.
-    out_schema = T.StructType(
-        [
-            _field(tagged, id_col),
-            _field(tagged, group_col),
-            T.StructField("ws_epoch", T.LongType()),
-            T.StructField("rk", T.LongType()),
-        ]
+    admitted = _admit_windowed(
+        counted, "domquota:", cap, group_col, id_col, ts_col, window_dur, lateness
     )
-    # the pending-id buffer's element type follows the frame's actual
-    # id type (ADVICE r13: a hardcoded LongType analyzed fine for any
-    # id but failed at state.update on the first buffered non-long id)
-    state_schema = T.StructType(
-        [
-            T.StructField("admitted", T.LongType()),
-            T.StructField("p_ws", T.ArrayType(T.LongType())),
-            T.StructField("p_we", T.ArrayType(T.LongType())),
-            T.StructField("p_lot", T.ArrayType(T.LongType())),
-            T.StructField("p_id", T.ArrayType(tagged.schema[id_col].dataType)),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            admitted, p_ws, p_we, p_lot, p_id = state.get
-            pend = [
-                list(x) for x in (p_ws or [], p_we or [], p_lot or [], p_id or [])
-            ]
-        else:
-            admitted, pend = 0, [[], [], [], []]
-        wm_sec = state.getCurrentWatermarkMs() // 1000
-        if not state.hasTimedOut:
-            # EXPLICIT late-row drop, gated on the CURRENT watermark
-            # (measured in the beyond-lateness test:
-            # applyInPandasWithState hands the function ALL arriving
-            # rows — Spark's below-watermark input filter covers
-            # streaming aggregations, not arbitrary stateful ops).  A
-            # row whose window end <= the invocation's watermark is
-            # beyond the lateness bound by definition — a streaming
-            # aggregation would drop it too — and its window either
-            # already flushed or flushes THIS invocation from rows
-            # that arrived in time; admitting a late straggler now
-            # would hand it a rank its window's admission pass never
-            # saw.  In-bound rows (we > watermark) always buffer,
-            # whatever micro-batch they land in — which is what makes
-            # the admitted set a pure function of the data for any
-            # arrival order within the bound.
-            for chunk in pdfs:
-                if not len(chunk):
-                    continue
-                ok = chunk[chunk["we"].to_numpy() > wm_sec]
-                pend[0].extend(int(v) for v in ok["ws"].to_numpy())
-                pend[1].extend(int(v) for v in ok["we"].to_numpy())
-                pend[2].extend(int(v) for v in ok["lottery"].to_numpy())
-                pend[3].extend(_py(v) for v in ok[id_col].to_numpy())
-        rows = sorted(zip(*pend))  # (ws, we, lottery, id): window order,
-        # then lottery within the window — the admission priority
-        out: list[tuple] = []
-        keep: list[tuple] = []
-        for ws, we, lo, doc in rows:
-            if we <= wm_sec:  # window closed: admit now, in order
-                if admitted < cap:
-                    admitted += 1
-                    out.append((doc, key[0], ws, admitted))
-            else:
-                keep.append((ws, we, lo, doc))
-        state.update(
-            (
-                admitted,
-                [r[0] for r in keep],
-                [r[1] for r in keep],
-                [r[2] for r in keep],
-                [r[3] for r in keep],
-            )
-        )
-        if keep:
-            # wake this group when the watermark passes the earliest
-            # open window, even with no new arrivals
-            state.setTimeoutTimestamp(min(r[1] for r in keep) * 1000)
-        if out:
-            yield pd.DataFrame(out, columns=[id_col, group_col, "ws_epoch", "rk"])
-
-    admitted_stream = tagged.groupBy(group_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
-    return admitted_stream.select(
-        id_col,
-        group_col,
-        F.col("ws_epoch").cast("timestamp").alias("window_start"),
-        "rk",
-    )
+    return admitted.select(id_col, group_col, "window_start", _rank())
 
 
 def streaming_token_budget_windowed(
@@ -381,112 +401,7 @@ def streaming_token_budget_windowed(
     and this counter agree exactly — pinned per closed window by
     tests/test_streaming_equivalence.py, including a cross-chunk burst
     the FCFS variant provably orders differently."""
-    lot = h60(F.concat(F.lit("tokbudget:"), F.col(id_col).cast("string")))
-    if "n_tokens" in df.columns:
-        base = df.select(id_col, group_col, ts_col, "n_tokens")
-    else:
-        base = df.select(
-            id_col,
-            group_col,
-            ts_col,
-            F.size(
-                F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
-            )
-            .cast("long")
-            .alias("n_tokens"),
-        )
-    tagged = (
-        base.withWatermark(ts_col, lateness)
-        .withColumn("win", F.window(ts_col, window_dur))
-        .withColumn("ws", F.col("win.start").cast("long"))
-        .withColumn("we", F.col("win.end").cast("long"))
-        .withColumn("lottery", lot)
-        .drop("win")
-    )
-    out_schema = T.StructType(
-        [
-            _field(tagged, id_col),
-            _field(tagged, group_col),
-            T.StructField("ws_epoch", T.LongType()),
-            T.StructField("n_tokens", T.LongType()),
-            T.StructField("prior_tokens", T.LongType()),
-        ]
-    )
-    # pending-id element type follows the frame's id type — see the
-    # domain-quota windowed variant's state_schema comment
-    state_schema = T.StructType(
-        [
-            T.StructField("tok_sum", T.LongType()),
-            T.StructField("p_ws", T.ArrayType(T.LongType())),
-            T.StructField("p_we", T.ArrayType(T.LongType())),
-            T.StructField("p_lot", T.ArrayType(T.LongType())),
-            T.StructField("p_id", T.ArrayType(tagged.schema[id_col].dataType)),
-            T.StructField("p_tok", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            tok_sum, p_ws, p_we, p_lot, p_id, p_tok = state.get
-            pend = [
-                list(x)
-                for x in (p_ws or [], p_we or [], p_lot or [], p_id or [], p_tok or [])
-            ]
-        else:
-            tok_sum, pend = 0, [[], [], [], [], []]
-        wm_sec = state.getCurrentWatermarkMs() // 1000
-        if not state.hasTimedOut:
-            # explicit watermark-gated late-row drop — same measured
-            # rationale as streaming_domain_quota_windowed (Spark's
-            # below-watermark filter covers aggregations, not
-            # arbitrary stateful ops)
-            for chunk in pdfs:
-                if not len(chunk):
-                    continue
-                ok = chunk[chunk["we"].to_numpy() > wm_sec]
-                pend[0].extend(int(v) for v in ok["ws"].to_numpy())
-                pend[1].extend(int(v) for v in ok["we"].to_numpy())
-                pend[2].extend(int(v) for v in ok["lottery"].to_numpy())
-                pend[3].extend(_py(v) for v in ok[id_col].to_numpy())
-                pend[4].extend(int(v) for v in ok["n_tokens"].to_numpy())
-        rows = sorted(zip(*pend))  # (ws, we, lottery, id, n_tok):
-        # window order, then lottery within the window
-        out: list[tuple] = []
-        keep: list[tuple] = []
-        for ws, we, lo, doc, n_tok in rows:
-            if we <= wm_sec:  # window closed: admit now, in order
-                if tok_sum < budget:
-                    out.append((doc, key[0], ws, n_tok, tok_sum))
-                    tok_sum += n_tok
-            else:
-                keep.append((ws, we, lo, doc, n_tok))
-        state.update(
-            (
-                tok_sum,
-                [r[0] for r in keep],
-                [r[1] for r in keep],
-                [r[2] for r in keep],
-                [r[3] for r in keep],
-                [r[4] for r in keep],
-            )
-        )
-        if keep:
-            state.setTimeoutTimestamp(min(r[1] for r in keep) * 1000)
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[id_col, group_col, "ws_epoch", "n_tokens", "prior_tokens"],
-            )
-
-    admitted_stream = tagged.groupBy(group_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
-    return admitted_stream.select(
-        id_col,
-        group_col,
-        F.col("ws_epoch").cast("timestamp").alias("window_start"),
-        "n_tokens",
-        "prior_tokens",
+    counted = df.select(id_col, group_col, ts_col, _token_counts(df, text_col))
+    return _admit_windowed(
+        counted, "tokbudget:", budget, group_col, id_col, ts_col, window_dur, lateness
     )

@@ -159,26 +159,3 @@ def file_replay_source(
         .option("maxFilesPerTrigger", 1)
         .parquet(dir_glob)
     )
-
-
-def rate_events(
-    spark: SparkSession, rows_per_second: int = 1000, n_users: int = 100
-) -> DataFrame:
-    """Synthetic load-generation source shaped like the events table:
-    the built-in rate source (monotonic value + timestamp per row)
-    projected into (event_id, ts, user_id, event_type, value, props).
-    Deterministic given the row index — for soak/throughput tests."""
-    types = F.array(*[F.lit(t) for t in ("click", "view", "purchase", "signup", "error")])
-    r = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-    return r.select(
-        F.col("value").alias("event_id"),
-        F.col("timestamp").alias("ts"),
-        (F.col("value") % n_users).alias("user_id"),
-        F.element_at(types, (F.col("value") % 5 + 1).cast("int")).alias("event_type"),
-        (F.pmod(F.hash(F.col("value")), F.lit(1000)) / 100.0).alias("value"),
-        F.lit("{}").alias("props"),
-    )

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from . import nlp, windows
 from .parse import parse_lines
-from .pipeline import toxicity_stream, topic_counts, trending_stream
+from .pipeline import topic_counts, toxicity_stream, trending_stream, window_concat_text
 
 # Reference parameters (SA.scala:48,52,103,167,175,183,191,194-213)
 PARSED_WINDOW_S = 1
@@ -67,13 +67,7 @@ def build_topology(lines: DataFrame) -> dict[str, DataFrame]:
     msgs = parse_lines(lines)
 
     # parsedStream / aggregateStream (SA.scala:44-52): windowed concat
-    concat = F.array_join(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("ts", "event_id", "text"))),
-            lambda x: x["text"],
-        ),
-        "\n",
-    ).alias("text")
+    concat = window_concat_text()
     parsed = windows.tumbling_agg(msgs, ["channel", "user"], PARSED_WINDOW_S, [concat])
     aggregate = windows.tumbling_agg(
         msgs, ["channel", "user"], AGGREGATE_WINDOW_S, [concat]
@@ -227,13 +221,7 @@ def build_streaming_topology(lines: DataFrame, watermark: str = "10 seconds") ->
         .dropDuplicates(["event_id", "key"])
     )
 
-    concat = F.array_join(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("ts", "event_id", "text"))),
-            lambda x: x["text"],
-        ),
-        "\n",
-    ).alias("text")
+    concat = window_concat_text()
     parsed = streaming_tumbling_agg(
         msgs, ["channel", "user"], PARSED_WINDOW_S, [concat], watermark=watermark
     )

@@ -2406,10 +2406,12 @@ def test_streaming_token_budget_vs_greedy_batch(spark, tmp_path):
     lottery, doc_id), exclusive running token sum, keep while it is
     under budget — and when the WHOLE corpus arrives as ONE batch the
     streamed frame must equal the BATCH sample_token_budget exactly
-    (same lottery, same counts, same prior sums)."""
+    (same lottery, same counts, same prior sums) — and, for a frame
+    that already carries ``n_tokens``, the batch
+    sample_token_budget_counts over those counts."""
     from pyspark.sql import types as T
 
-    from sparksent.ext.curation import sample_token_budget
+    from sparksent.ext.curation import sample_token_budget, sample_token_budget_counts
     from sparksent.ext.hashing import h60
     from sparksent.streaming import streaming_token_budget
     from sparksent.streaming.sources import file_replay_source, write_replay_chunks
@@ -2427,10 +2429,10 @@ def test_streaming_token_budget_vs_greedy_batch(spark, tmp_path):
         ]
     )
 
-    def run_stream(replay, ckpt, out_name):
+    def run_stream(replay, ckpt, out_name, src_schema=schema):
         q = (
             streaming_token_budget(
-                file_replay_source(spark, replay, schema=schema), budget=budget
+                file_replay_source(spark, replay, schema=src_schema), budget=budget
             )
             .writeStream.outputMode("append")
             .format("memory")
@@ -2493,6 +2495,29 @@ def test_streaming_token_budget_vs_greedy_batch(spark, tmp_path):
         for r in sample_token_budget(docs, budget=budget).collect()
     }
     assert got1 == want1 and len(want1) > 0
+
+    # leg 2b: a frame that already carries n_tokens skips the whitespace
+    # count; counts unlike the whitespace ones -> the batch counts form
+    counted = docs.select(
+        "doc_id", "lang", (F.length("text") % 7 + 1).cast("long").alias("n_tokens")
+    )
+    replay1c = str(tmp_path / "tb_replay1c")
+    write_replay_chunks(counted, replay1c, 1, order_col="doc_id")
+    counted_schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("lang", T.StringType()),
+            T.StructField("n_tokens", T.LongType()),
+        ]
+    )
+    got1c = run_stream(
+        replay1c, str(tmp_path / "tb_ckpt1c"), "t_tb1c", counted_schema
+    )
+    want1c = {
+        (r.doc_id, r.lang, r.n_tokens, r.prior_tokens)
+        for r in sample_token_budget_counts(counted, budget=budget).collect()
+    }
+    assert got1c == want1c and len(want1c) > 0 and got1c != got1
 
 
 def test_streaming_token_budget_survives_checkpoint_restart(spark, tmp_path):
