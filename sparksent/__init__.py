@@ -5,8 +5,9 @@ chat messages; see SURVEY.md), re-designed Spark-first:
 
 - batch DataFrame implementations are the source of truth (testable
   against a DuckDB oracle);
-- Structured Streaming versions are thin wrappers over the same
-  transformation functions (``sparksent.streaming``);
+- the time and session windows and the topology's shared streams run
+  unchanged as Structured Streaming queries; ``sparksent.streaming``
+  holds only what differs (stateful operators, sources, sinks);
 - the reference's external-NLP enrichment is replaced by deterministic,
   SQL-mirrorable lexicon pipelines built from JVM-side expressions
   (``sparksent.nlp``) — no row-at-a-time Python UDFs anywhere in the
@@ -20,7 +21,7 @@ Package map (SURVEY.md §7.0):
     tables.py     fixture table loaders (/root/testdata/sf*/ parquet)
     schemas.py    the reference's record types as StructTypes
     parse.py      wire-format line -> Message parsing (SA.scala:45-48)
-    windows.py    tumbling/sliding/cumulative/count window dispatcher
+    windows.py    time (tumbling/sliding), session, cumulative and count windows
     nlp.py        deterministic sentiment/entity/classify pipelines
     pipeline.py   mood_stream, toxicity_stream, topic/trending queries
     streaming/    Structured Streaming wrappers + stateful count-window

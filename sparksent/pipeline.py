@@ -20,13 +20,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .windows import (
-    count_window_agg,
-    cumulative_agg,
-    exact_sum,
-    tumbling_agg,
-    sliding_agg,
-)
+from .windows import count_window_agg, cumulative_agg, exact_sum, window_agg
 
 # ---------------------------------------------------------------------------
 # windowed text concatenation (SA.scala:44-52, 289-302)
@@ -89,9 +83,7 @@ def mood_stream(
         return cumulative_agg(moods, ["key"], "value").select(
             "key", "value", "moodType", "ts", "event_id"
         )
-    if t2 == 0:
-        return tumbling_agg(moods, ["key"], t1, agg)
-    return sliding_agg(moods, ["key"], t1, t2, agg)
+    return window_agg(moods, ["key"], t1, agg, slide_s=t2 or None)
 
 
 # ---------------------------------------------------------------------------
@@ -134,7 +126,7 @@ def topic_counts(
     in Spark that is literally ``groupBy(window, key).count()`` — the
     partial/final hash aggregate does the map-side pre-sum the Flink
     reduce did."""
-    return tumbling_agg(
+    return window_agg(
         df, [key_col], size_s, [F.count("*").alias("count")], ts_col
     ).withColumnRenamed(key_col, "key")
 

@@ -244,7 +244,7 @@ def q_entity_opinion(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("score_raw") / F.lit(10.0)).alias("value"),
         F.first(F.lit("Entity")).alias("moodType"),
     ]
-    return windows.tumbling_agg(ents, ["key"], 30, agg)
+    return windows.window_agg(ents, ["key"], 30, agg)
 
 
 # ---------------------------------------------------------------------------

@@ -50,7 +50,7 @@ def q_parse_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _window_concat(spark: SparkSession, sf_dir: str, size_s: int) -> DataFrame:
     msgs = tables.messages(spark, sf_dir)
     concat = pipeline.window_concat_text()
-    return windows.tumbling_agg(msgs, ["channel", "user"], size_s, [concat])
+    return windows.window_agg(msgs, ["channel", "user"], size_s, [concat])
 
 
 def _window_concat_oracle(size_s: int) -> str:

@@ -29,17 +29,13 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "sparksent", cpus: int | None = None) -> SparkSession:
-    """Build (or reuse) the session. ``cpus`` defaults to $SPARK_GRAFT_CPUS or '*'."""
-    if cpus is None:
-        env = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{env}]" if env else "local[*]"
-    else:
-        master = f"local[{cpus}]"
-    n_shuffle = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or reuse) the session. ``cpus`` defaults to $SPARK_GRAFT_CPUS
+    or '*'; the shuffle partitions follow the same value, or 32 for '*'."""
+    n = cpus or os.environ.get("SPARK_GRAFT_CPUS")
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{n or '*'}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", n_shuffle)
+        .config("spark.sql.shuffle.partitions", str(n or 32))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -8,7 +8,9 @@ DataFrame. This package holds the parts that ARE streaming-specific:
 
 - sources.py: socket (the reference's ingest, SA.scala:41), file-replay
   (deterministic testing)
-- ops.py:     watermarked windowed aggregation + update-mode cumulative
+- ops.py:     update-mode cumulative, exact dedup, interval join, HLL
+  registers (windowed aggregation is ``windows.window_agg`` /
+  ``windows.session_agg`` on a watermarked stream)
 - count_window.py: ``ordered_fold``, the one arbitrary stateful operator
   (applyInPandasWithState) every ordered per-group operator is a pure
   ``step`` over: the count window (countWindow(N).sum, SA.scala:304-311)
@@ -61,8 +63,6 @@ from .ops import (  # noqa: F401
     streaming_cumulative_sum,
     streaming_exact_dedup,
     streaming_interval_join,
-    streaming_session_agg,
-    streaming_tumbling_agg,
 )
 from .quota import (  # noqa: F401
     streaming_domain_quota,

@@ -1,14 +1,18 @@
-"""Streaming aggregation wrappers.
+"""Streaming-only aggregation operators.
 
-Same logical shapes as :mod:`sparksent.windows`, with the two
-streaming-specific concerns the reference never had (processing time ⇒
-no lateness concept, SURVEY.md §2.6):
+Windowed aggregation needs no wrapper here: ``windows.window_agg`` and
+``windows.session_agg`` run unchanged on a stream whose ``ts`` carries a
+``withWatermark`` — the watermark bounds their append-mode state, the
+one streaming concern the reference never had (processing time ⇒ no
+lateness concept, SURVEY.md §2.6). This module holds the shapes that do
+differ from batch:
 
-- a watermark bounds state for append-mode windowed aggregation;
 - the reference's per-record running reduce (SA.scala:285) becomes an
   update-mode ``groupBy().agg()`` — Spark emits per *trigger* rather
   than per record; the batch cumulative form reproduces the per-record
-  history exactly (documented delta, SURVEY.md §2.6.3).
+  history exactly (documented delta, SURVEY.md §2.6.3);
+- exact dedup, the stream-stream interval join and the HLL register
+  table, each with watermark-bounded state.
 
 State sizing at scale: windowed-agg state is O(open windows × keys) and
 the watermark expires it; update-mode running sums are O(keys). Both are
@@ -20,41 +24,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def streaming_tumbling_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    size_s: int,
-    aggs: Sequence[Column],
-    ts_col: str = "ts",
-    watermark: str | None = "10 seconds",
-    slide_s: int | None = None,
-) -> DataFrame:
-    """Watermarked keyed tumbling/sliding window aggregation — the
-    streaming twin of windows.tumbling_agg/sliding_agg with the same
-    output shape (window_start_s BIGINT + keys + aggs).
-
-    ``watermark=None`` means ``df`` already carries a watermark on
-    ``ts_col`` (e.g. for an upstream ``dropDuplicates``): Spark rejects a
-    second ``withWatermark`` on the same column with "Redefining
-    watermark is disallowed"."""
-    size = f"{size_s} seconds"
-    win = (
-        F.window(F.col(ts_col), size)
-        if slide_s is None
-        else F.window(F.col(ts_col), size, f"{slide_s} seconds")
-    )
-    if watermark is not None:
-        df = df.withWatermark(ts_col, watermark)
-    return (
-        df.groupBy(win.alias("w"), *keys)
-        .agg(*aggs)
-        .withColumn("window_start_s", F.unix_timestamp(F.col("w.start")))
-        .drop("w")
-    )
+from ..windows import window_agg
 
 
 def streaming_cumulative_sum(
@@ -68,31 +41,6 @@ def streaming_cumulative_sum(
     updated row per key per trigger (vs Flink's per record)."""
     return df.groupBy(*keys).agg(
         F.sum(F.col(value_col).cast("decimal(28,6)")).cast("double").alias(out_col)
-    )
-
-
-def streaming_session_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    gap: str,
-    aggs: Sequence[Column],
-    ts_col: str = "ts",
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Watermarked keyed session-window aggregation (append mode): the
-    streaming twin of the batch ``F.session_window`` form — identical
-    merge semantics (a new session starts when the inactivity gap
-    reaches ``gap``), identical output shape (session_start_us BIGINT +
-    keys + aggs). A session emits once the watermark passes its close.
-
-    State at scale: O(open sessions) per key, expired by the watermark —
-    the same state-store partitioning as the group-by shuffle."""
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("sw"), *keys)
-        .agg(*aggs)
-        .withColumn("session_start_us", F.unix_micros(F.col("sw.start")))
-        .drop("sw")
     )
 
 
@@ -175,12 +123,9 @@ def streaming_hll_registers(
     from ..ext.sketches import HLL_M, HLL_P, _rho
 
     h = h60(F.col(value_col).cast("string"))
-    return (
+    regs = (
         df.withColumn("bucket", h % HLL_M)
         .withColumn("rho", _rho(F.shiftright(h, HLL_P)))
         .withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), f"{size_s} seconds").alias("w"), *keys, "bucket")
-        .agg(F.max("rho").alias("mj"))
-        .withColumn("window_start_s", F.unix_timestamp(F.col("w.start")))
-        .drop("w")
     )
+    return window_agg(regs, [*keys, "bucket"], size_s, [F.max("rho").alias("mj")], ts_col)

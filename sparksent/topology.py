@@ -1,9 +1,13 @@
 """The full reference topology as one declarative DAG.
 
 ``SentimentAnalysis.scala:34-228`` declares 13 named streams off one
-socket source; this module builds the same dataflow over any message
-DataFrame (batch or streaming — the transformations are identical, which
-is the point of Structured Streaming's unified model):
+socket source; this module builds the same dataflow over a DataFrame of
+wire lines. ``build_topology`` builds every node over a batch frame;
+``build_streaming_topology`` builds the eight that run as append-mode
+streaming queries. The five streams both need (parsed, entity, topic,
+entity-opinion and channel-mood) are defined once, in
+``_shared_streams``, and run unchanged as batch or stream — the point of
+Structured Streaming's unified model:
 
     lines ──parse──> parsedStream(1s concat) ──> aggregateStream(100s)
     parsed ──sentiment──> sentimentStream ──> userMoodStream (cumulative)
@@ -50,11 +54,64 @@ CHANNEL_MOOD_SIZE_S, CHANNEL_MOOD_SLIDE_S = 90, 60
 TOXIC_TOPIC = (25, -20.0)
 TOXIC_USER = (10, -10.0)
 TOXIC_CHANNEL = (50, -30.0)
+# event-time lateness bound of every windowed stream (a no-op in batch)
+WATERMARK = "10 seconds"
 
 
-def _mood_value() -> F.Column:
-    # score * magnitude == score_raw / 10 exactly (nlp.py header)
-    return (F.col("score_raw") / F.lit(10.0)).alias("value")
+def _moods(df: DataFrame, key_col: str) -> DataFrame:
+    # per-message mood; score * magnitude == score_raw / 10 exactly (nlp.py header)
+    return df.select(
+        F.col(key_col).alias("key"), (F.col("score_raw") / F.lit(10.0)).alias("value"),
+        "ts", "event_id",
+    )
+
+
+def _window_mood(mood_type: str) -> list[F.Column]:
+    return [(F.sum("score_raw") / F.lit(10.0)).alias("value"),
+            F.first(F.lit(mood_type)).alias("moodType")]
+
+
+def _shared_streams(msgs: DataFrame, sentiment: DataFrame) -> dict[str, DataFrame]:
+    """parsedStream, entityStream, topicStream, entityOpinionStream and
+    channelMoodStream: the streams both builders define identically.
+
+    Each windowed stream watermarks its input, as append-mode streaming
+    requires; on a batch frame Spark removes ``withWatermark`` from the
+    plan. entityStream's watermark follows the entity filter, so
+    the entity streams' event time advances only on entity-bearing
+    lines. Its ``dropDuplicates`` keys, (event_id, key), hold no event
+    time, so that state is never expired.
+    """
+    # parsedStream (SA.scala:44-48): 1s windowed concat
+    parsed = windows.window_agg(
+        msgs.withWatermark("ts", WATERMARK), ["channel", "user"], PARSED_WINDOW_S,
+        [window_concat_text()],
+    )
+    # entityStream (SA.scala:62-93): one row per (message, entity)
+    entities = (
+        sentiment.select(
+            "channel", "user", "ts", "event_id", "score_raw",
+            F.explode(nlp.tokens("text")).alias("key"),
+        )
+        .filter(F.col("key").isin(*nlp.ENTITIES))
+        .withWatermark("ts", WATERMARK)
+        .dropDuplicates(["event_id", "key"])
+    )
+    channels = sentiment.select(F.col("channel").alias("key"), "ts", "score_raw")
+    return {
+        "parsedStream": parsed,
+        "entityStream": entities,
+        # topicStream (SA.scala:95-104)
+        "topicStream": topic_counts(entities, "key", TOPIC_WINDOW_S),
+        # entityOpinionStream / channelMoodStream (SA.scala:175-192)
+        "entityOpinionStream": windows.window_agg(
+            entities, ["key"], ENTITY_OPINION_WINDOW_S, _window_mood("Entity")
+        ),
+        "channelMoodStream": windows.window_agg(
+            channels.withWatermark("ts", WATERMARK), ["key"], CHANNEL_MOOD_SIZE_S,
+            _window_mood("Channel"), slide_s=CHANNEL_MOOD_SLIDE_S,
+        ),
+    }
 
 
 def build_topology(lines: DataFrame) -> dict[str, DataFrame]:
@@ -65,48 +122,19 @@ def build_topology(lines: DataFrame) -> dict[str, DataFrame]:
     tests materialize all of them).
     """
     msgs = parse_lines(lines)
-
-    # parsedStream / aggregateStream (SA.scala:44-52): windowed concat
-    concat = window_concat_text()
-    parsed = windows.tumbling_agg(msgs, ["channel", "user"], PARSED_WINDOW_S, [concat])
-    aggregate = windows.tumbling_agg(
-        msgs, ["channel", "user"], AGGREGATE_WINDOW_S, [concat]
-    )
-
     # sentimentStream (SA.scala:55-59)
     sentiment = nlp.with_sentiment(msgs)
+    shared = _shared_streams(msgs, sentiment)
+    entities = shared["entityStream"]
 
-    # entityStream (SA.scala:62-93): one row per (message, entity)
-    entities = (
-        sentiment.select(
-            "channel", "user", "ts", "event_id", "score_raw",
-            F.explode(nlp.tokens("text")).alias("key"),
-        )
-        .filter(F.col("key").isin(*nlp.ENTITIES))
-        .distinct()
+    # aggregateStream (SA.scala:49-52): 100s windowed concat
+    aggregate = windows.window_agg(
+        msgs, ["channel", "user"], AGGREGATE_WINDOW_S, [window_concat_text()]
     )
-
-    # topicStream (SA.scala:95-104) + the dead trendingStream done right
-    topics = topic_counts(entities, "key", TOPIC_WINDOW_S)
+    # the dead trendingStream done right (SA.scala:106-123)
     trending = trending_stream(entities, "key", TOPIC_WINDOW_S)
-
-    # mood streams (SA.scala:162-192)
+    # userMoodStream (SA.scala:162-168)
     user_mood = _cumulative_mood(sentiment, "user", "User")
-    channel_mood = windows.sliding_agg(
-        sentiment.select(F.col("channel").alias("key"), "ts", "score_raw"),
-        ["key"],
-        CHANNEL_MOOD_SIZE_S,
-        CHANNEL_MOOD_SLIDE_S,
-        [(F.sum("score_raw") / F.lit(10.0)).alias("value"),
-         F.first(F.lit("Channel")).alias("moodType")],
-    )
-    entity_opinion = windows.tumbling_agg(
-        entities,
-        ["key"],
-        ENTITY_OPINION_WINDOW_S,
-        [(F.sum("score_raw") / F.lit(10.0)).alias("value"),
-         F.first(F.lit("Entity")).alias("moodType")],
-    )
 
     # categoryStream / categorySentimentStream / categoryOpinionStream
     # (SA.scala:126-160, 178-184) — over the 100s aggregate, as in the
@@ -129,34 +157,23 @@ def build_topology(lines: DataFrame) -> dict[str, DataFrame]:
     toxic_user = toxicity_stream(user_mood, *TOXIC_USER)
     toxic_channel = toxicity_stream(user_mood, *TOXIC_CHANNEL)
     toxic_topic = toxicity_stream(
-        entity_opinion, *TOXIC_TOPIC, order_cols=("window_start_s",)
+        shared["entityOpinionStream"], *TOXIC_TOPIC, order_cols=("window_start_s",)
     )
 
     # Evident-intent variants (the semantics the reference author likely
     # wanted: count windows over the raw per-message / per-entity moods,
     # channel toxicity keyed by channel) — kept as first-class nodes so
     # both interpretations are queryable (SURVEY.md §2.0 rows 21-24).
-    per_msg_user_mood = sentiment.select(
-        F.col("user").alias("key"), _mood_value(), "ts", "event_id"
-    )
-    per_msg_channel_mood = sentiment.select(
-        F.col("channel").alias("key"), _mood_value(), "ts", "event_id"
-    )
-    per_entity_mood = entities.select("key", _mood_value(), "ts", "event_id")
-    toxic_user_intent = toxicity_stream(per_msg_user_mood, *TOXIC_USER)
-    toxic_channel_intent = toxicity_stream(per_msg_channel_mood, *TOXIC_CHANNEL)
-    toxic_topic_intent = toxicity_stream(per_entity_mood, *TOXIC_TOPIC)
+    toxic_user_intent = toxicity_stream(_moods(sentiment, "user"), *TOXIC_USER)
+    toxic_channel_intent = toxicity_stream(_moods(sentiment, "channel"), *TOXIC_CHANNEL)
+    toxic_topic_intent = toxicity_stream(_moods(entities, "key"), *TOXIC_TOPIC)
 
     return {
-        "parsedStream": parsed,
+        **shared,
         "aggregateStream": aggregate,
         "sentimentStream": sentiment,
-        "entityStream": entities,
-        "topicStream": topics,
         "trendingStream": trending,
         "userMoodStream": user_mood,
-        "channelMoodStream": channel_mood,
-        "entityOpinionStream": entity_opinion,
         "categorySentimentStream": category_sentiment,
         "categoryOpinionStream": category_opinion,
         "toxicTopicStream": toxic_topic,
@@ -183,18 +200,16 @@ def _cumulative_mood(df: DataFrame, key_col: str, mood_type: str) -> DataFrame:
     )
 
 
-def build_streaming_topology(lines: DataFrame, watermark: str = "10 seconds") -> dict[str, DataFrame]:
-    """The reference topology over a STREAMING lines DataFrame — the
-    same transformation functions as :func:`build_topology` wherever
-    Structured Streaming expresses them directly (the unified-model
-    claim, verified end-to-end by tests/test_streaming_equivalence.py):
+def build_streaming_topology(lines: DataFrame) -> dict[str, DataFrame]:
+    """The reference topology over a STREAMING lines DataFrame: the
+    streams Structured Streaming runs in append mode, built by the same
+    code as :func:`build_topology` (the unified-model claim, verified
+    end-to-end by tests/test_streaming_equivalence.py):
 
-    - sentimentStream: stateless enrichment, identical code;
-    - parsedStream / topicStream / entityOpinionStream /
-      channelMoodStream: watermarked windowed aggs (append mode);
-    - entityStream: the explode + per-(message, entity) dedup uses
-      ``dropDuplicates`` keyed on (event_id, key) — watermark-bounded
-      state instead of the batch ``distinct()``;
+    - sentimentStream: stateless enrichment;
+    - parsedStream / entityStream / topicStream / entityOpinionStream /
+      channelMoodStream: :func:`_shared_streams`, watermarked windowed
+      aggs and the per-(message, entity) dedup;
     - toxicUserStream: the literal cumulative-mood count window fused
       into ONE applyInPandasWithState operator (two chained arbitrary
       stateful operators are unsupported — streaming/count_window.py);
@@ -205,61 +220,17 @@ def build_streaming_topology(lines: DataFrame, watermark: str = "10 seconds") ->
     streaming_cumulative_sum (per-trigger emission, not per-record);
     trendingStream's agg-to-agg ratio join runs in foreachBatch.
     """
-    from .streaming import streaming_count_window, streaming_tumbling_agg
+    from .streaming import streaming_count_window
     from .streaming.count_window import streaming_toxicity_literal
 
     msgs = parse_lines(lines)
     sentiment = nlp.with_sentiment(msgs)
-
-    entities = (
-        sentiment.select(
-            "channel", "user", "ts", "event_id", "score_raw",
-            F.explode(nlp.tokens("text")).alias("key"),
-        )
-        .filter(F.col("key").isin(*nlp.ENTITIES))
-        .withWatermark("ts", watermark)
-        .dropDuplicates(["event_id", "key"])
-    )
-
-    concat = window_concat_text()
-    parsed = streaming_tumbling_agg(
-        msgs, ["channel", "user"], PARSED_WINDOW_S, [concat], watermark=watermark
-    )
-
-    # entities is already watermarked (for its dropDuplicates)
-    topics = streaming_tumbling_agg(
-        entities, ["key"], TOPIC_WINDOW_S,
-        [F.count("*").alias("count")], watermark=None,
-    )
-    entity_opinion = streaming_tumbling_agg(
-        entities, ["key"], ENTITY_OPINION_WINDOW_S,
-        [(F.sum("score_raw") / F.lit(10.0)).alias("value"),
-         F.first(F.lit("Entity")).alias("moodType")],
-        watermark=None,
-    )
-    channel_mood = streaming_tumbling_agg(
-        sentiment.select(F.col("channel").alias("key"), "ts", "score_raw"),
-        ["key"], CHANNEL_MOOD_SIZE_S,
-        [(F.sum("score_raw") / F.lit(10.0)).alias("value"),
-         F.first(F.lit("Channel")).alias("moodType")],
-        watermark=watermark, slide_s=CHANNEL_MOOD_SLIDE_S,
-    )
-
-    user_moods = sentiment.select(
-        F.col("user").alias("key"), _mood_value(), "ts", "event_id"
-    )
-    toxic_user = streaming_toxicity_literal(user_moods, *TOXIC_USER)
-    toxic_user_intent = streaming_count_window(user_moods, TOXIC_USER[0]).filter(
-        F.col("value") <= TOXIC_USER[1]
-    )
-
+    user_moods = _moods(sentiment, "user")
     return {
         "sentimentStream": sentiment,
-        "parsedStream": parsed,
-        "entityStream": entities,
-        "topicStream": topics,
-        "entityOpinionStream": entity_opinion,
-        "channelMoodStream": channel_mood,
-        "toxicUserStream": toxic_user,
-        "toxicUserStreamIntent": toxic_user_intent,
+        **_shared_streams(msgs, sentiment),
+        "toxicUserStream": streaming_toxicity_literal(user_moods, *TOXIC_USER),
+        "toxicUserStreamIntent": streaming_count_window(user_moods, TOXIC_USER[0]).filter(
+            F.col("value") <= TOXIC_USER[1]
+        ),
     }

@@ -10,20 +10,24 @@ alerting path (SentimentAnalysis.scala:304-311):
 3. unbounded running reduce — keyed ``reduce`` no window (SA.scala:285)
 4. count window          — ``countWindow(n).sum``        (SA.scala:309)
 
-This module reproduces them as *batch* DataFrame transformations over an
+This module reproduces them as DataFrame transformations over an
 explicit event-time column (the reference used implicit processing time —
 SURVEY.md §2.6; event time is the deterministic, testable superset).
+The time windows (``window_agg``) and session windows (``session_agg``)
+run unchanged on a batch or a streaming DataFrame; a streaming caller
+only adds ``withWatermark``. The per-record cumulative and count-window
+forms are batch-only here: their streaming versions are arbitrary
+stateful operators (``sparksent.streaming.count_window``).
 The timing dispatch among the first three is ``pipeline.mood_stream``.
-``sparksent.streaming`` wraps the same shapes for Structured Streaming.
 
 Scale notes (100 TB posture):
 - Tumbling/sliding aggregation is a single hash-aggregate with map-side
   partial aggregation — one shuffle on (window, keys), no buffering of
   window contents (same incremental-reduce property the reference got
   from Flink's ReducingState).
-- Sliding windows use Spark's ``F.window`` which replicates each row into
-  ceil(size/slide) windows *before* the partial aggregate — for our
-  90s/60s case that's ≤2×, bounded and map-local.
+- Sliding windows replicate each row into ceil(size/slide) windows
+  *before* the partial aggregate — for our 90s/60s case that's ≤2×,
+  bounded and map-local.
 - The cumulative and count-window forms need a per-key sort
   (``Window.partitionBy(key).orderBy(ts, id)``). That is one shuffle +
   per-partition sort; keys are assumed to have bounded per-key history
@@ -62,18 +66,6 @@ def exact_sum(col: Column | str, scale: int = 6) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def tumbling_start_s(ts: Column | str, size_s: int) -> Column:
-    """Epoch-second start of the size_s tumbling window containing ts.
-
-    Equivalent to ``F.window(ts, f"{size_s} seconds").start`` (epoch-0
-    aligned) but emitted as BIGINT: cheaper shuffle key, and the DuckDB
-    oracle mirrors it as ``epoch(ts)::BIGINT // size * size``.
-    """
-    t = F.col(ts) if isinstance(ts, str) else ts
-    e = F.unix_timestamp(t)
-    return (F.floor(e / size_s) * size_s).cast("long")
-
-
 def count_bucket(keys: Sequence[str], n: int, order_cols: Sequence[str]) -> Column:
     """0-based bucket index: every n-th observation of a key starts a new
     bucket (the reference's ``countWindow(n)``, SA.scala:309). Arrival
@@ -88,45 +80,34 @@ def count_bucket(keys: Sequence[str], n: int, order_cols: Sequence[str]) -> Colu
 # ---------------------------------------------------------------------------
 
 
-def tumbling_agg(
+def window_agg(
     df: DataFrame,
     keys: Sequence[str],
     size_s: int,
     aggs: Sequence[Column],
     ts_col: str = "ts",
+    slide_s: int | None = None,
 ) -> DataFrame:
-    """Keyed tumbling event-time window aggregation (SA.scala:283).
+    """Keyed tumbling (SA.scala:283) or, with ``slide_s``, sliding
+    (SA.scala:284) event-time window aggregation, batch or streaming.
+    Output: window_start_s BIGINT + keys + aggs.
 
-    One hash-aggregate: partial map-side combine, shuffle on
-    (window_start_s, keys), final combine. No per-window buffering.
+    Groups on ``F.window`` (epoch-0 aligned), the only window key
+    Structured Streaming accepts for append-mode aggregation; a
+    streaming caller sets ``withWatermark`` on ``ts_col`` first, this
+    function never does. One hash-aggregate: partial map-side combine,
+    shuffle on (window, keys), final combine; a sliding window first
+    assigns each row to the ceil(size/slide) windows covering it.
+
+    A row whose ``ts_col`` is NULL falls in no window and is dropped,
+    batch and streaming alike.
     """
+    slide = None if slide_s is None else f"{slide_s} seconds"
     return (
-        df.withColumn("window_start_s", tumbling_start_s(ts_col, size_s))
-        .groupBy("window_start_s", *keys)
+        df.groupBy(F.window(F.col(ts_col), f"{size_s} seconds", slide).alias("w"), *keys)
         .agg(*aggs)
-    )
-
-
-def sliding_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    size_s: int,
-    slide_s: int,
-    aggs: Sequence[Column],
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Keyed sliding event-time window aggregation (SA.scala:284).
-
-    ``F.window`` assigns each row to the ceil(size/slide) windows covering
-    it (map-side row replication), then a single hash-aggregate. The
-    window start is projected to epoch seconds for the oracle.
-    """
-    win = F.window(F.col(ts_col), f"{size_s} seconds", f"{slide_s} seconds")
-    return (
-        df.withColumn("w", win)
-        .withColumn("window_start_s", F.unix_timestamp(F.col("w.start")))
-        .groupBy("window_start_s", *keys)
-        .agg(*aggs)
+        .select(F.unix_timestamp(F.col("w.start")).alias("window_start_s"), "*")
+        .drop("w")
     )
 
 
@@ -187,7 +168,11 @@ def session_agg(
     """Keyed session windows with a ``gap_s``-second inactivity timeout
     (``F.session_window`` — identical semantics batch and streaming; a
     new session starts when the gap to the previous event reaches the
-    timeout). Output: keys + session_start_us BIGINT + aggs."""
+    timeout). Output: keys + aggs + session_start_us BIGINT.
+
+    A streaming caller sets ``withWatermark`` on ``ts_col`` first; in
+    append mode a session emits once the watermark passes its close, and
+    its state (open sessions per key) expires with the watermark."""
     return (
         df.groupBy(
             F.session_window(F.col(ts_col), f"{gap_s} seconds").alias("sw"), *keys

@@ -1,0 +1,27 @@
+"""``session.get_spark`` sizing, in a fresh process: an in-process call
+would reuse and reconfigure the shared test session."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_get_spark_cpus_sizes_master_and_shuffle_partitions():
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env.update(PYTHONPATH=ROOT, SPARK_GRAFT_DRIVER_MEM="1g")
+    code = (
+        "from sparksent.session import get_spark\n"
+        "s = get_spark('cpus-probe', cpus=2)\n"
+        "print(s.sparkContext.master, s.conf.get('spark.sql.shuffle.partitions'))\n"
+        "s.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, cwd=ROOT,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split()[-2:] == ["local[2]", "2"]

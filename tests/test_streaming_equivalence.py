@@ -15,7 +15,6 @@ from sparksent.streaming import (
     file_replay_source,
     streaming_count_window,
     streaming_cumulative_sum,
-    streaming_tumbling_agg,
 )
 from sparksent.streaming.sources import write_replay_chunks
 from sparksent.tables import load_table
@@ -68,11 +67,8 @@ def _run_to_memory(df, name, mode):
 
 
 def test_tumbling_window_equivalence(spark, replay_dir, tmp_path):
-    stream = file_replay_source(spark, replay_dir)
-    agg = streaming_tumbling_agg(
-        stream, ["event_type"], 10, [F.count("*").alias("count")],
-        watermark="10 seconds",
-    )
+    stream = file_replay_source(spark, replay_dir).withWatermark("ts", "10 seconds")
+    agg = windows.window_agg(stream, ["event_type"], 10, [F.count("*").alias("count")])
     _add_sentinels(spark, replay_dir)
     _run_to_memory(agg, "t_tumble", "append")
     got = (
@@ -81,7 +77,7 @@ def test_tumbling_window_equivalence(spark, replay_dir, tmp_path):
         .select("window_start_s", "event_type", "count")
     )
     ev = load_table(spark, SF_DIR_SMALL, "events")
-    want = windows.tumbling_agg(ev, ["event_type"], 10, [F.count("*").alias("count")])
+    want = windows.window_agg(ev, ["event_type"], 10, [F.count("*").alias("count")])
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 
@@ -195,8 +191,6 @@ def _assert_same_buckets(got, want):
 def test_session_window_equivalence(spark, tmp_path):
     """Streaming session windows == batch F.session_window over the same
     rows, after a watermark-advancing sentinel closes every session."""
-    from sparksent.streaming import streaming_session_agg
-
     replay = str(tmp_path / "session_replay")
     ev = load_table(spark, SF_DIR_SMALL, "events")
     write_replay_chunks(ev, replay, N_CHUNKS)
@@ -205,8 +199,8 @@ def test_session_window_equivalence(spark, tmp_path):
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("sum_value"),
     ]
-    stream = file_replay_source(spark, replay)
-    out = streaming_session_agg(stream, ["user_id"], "30 minutes", aggs)
+    stream = file_replay_source(spark, replay).withWatermark("ts", "10 seconds")
+    out = windows.session_agg(stream, ["user_id"], 1800, aggs)
     _add_sentinels(spark, replay)
     _run_to_memory(out, "t_session", "append")
     got = spark.table("t_session").filter(F.col("user_id") != -1)
@@ -227,7 +221,6 @@ def test_session_window_matches_oracle_sf001(spark, ducks, tmp_path):
     the driver applies to the batch ``session_agg_30m`` query, so the
     streaming surface gets the oracle-grade signal too (VERDICT r1 #8)."""
     from sparksent.registry import REGISTRY, _ensure_loaded
-    from sparksent.streaming import streaming_session_agg
 
     from conftest import SF_DIR, assert_oracle_match
 
@@ -240,8 +233,8 @@ def test_session_window_matches_oracle_sf001(spark, ducks, tmp_path):
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("sum_value"),
     ]
-    stream = file_replay_source(spark, replay)
-    out = streaming_session_agg(stream, ["user_id"], "30 minutes", aggs)
+    stream = file_replay_source(spark, replay).withWatermark("ts", "10 seconds")
+    out = windows.session_agg(stream, ["user_id"], 1800, aggs)
     _add_sentinels(spark, replay)
     _run_to_memory(out, "t_session_oracle", "append")
     got = spark.table("t_session_oracle").filter(F.col("user_id") != -1).select(
@@ -321,7 +314,9 @@ def test_interval_join_equivalence(spark, tmp_path):
 def test_streaming_topology_equivalence(spark, tmp_path):
     """The reference topology end-to-end in streaming mode — raw wire
     lines replayed file-per-microbatch through parse -> NLP -> windowed
-    aggs / count windows — equals the batch topology on the same rows.
+    aggs / count windows — equals the batch topology on the same rows:
+    all eight streams run concurrently, and each has the batch stream's
+    columns and rows (the toxic count windows: its complete buckets).
 
     The fixture text carries no lexicon or entity token, so two more
     files of lexicon- and entity-bearing lines follow it: without them
@@ -341,12 +336,13 @@ def test_streaming_topology_equivalence(spark, tmp_path):
     last_s, last_id = fixture_lines.agg(
         F.max(F.unix_timestamp("ts")), F.max("event_id")
     ).first()
-    # "troll" posts 12 negative lines: one complete toxic count window
+    # "troll" posts 12 lines of mood -1.2: one complete toxic count window
+    # of its raw moods (toxicUserStreamIntent) and of its running totals
     texts = ["spark fast", "stream join hash", "table sort dup"]
     extra = []
     for f in range(2):
         rows = [
-            ("view,troll,hash slow scan" if i % 2 else f"view,u{i % 3},{texts[(i + f) % 3]}",
+            ("view,troll,hash slow scan dup" if i % 2 else f"view,u{i % 3},{texts[(i + f) % 3]}",
              last_id + 1 + 12 * f + i)
             for i in range(12)
         ]
@@ -378,42 +374,51 @@ def test_streaming_topology_equivalence(spark, tmp_path):
         ).select("line", "ts", "event_id")
         append_flat_file(row, replay, f"zz_sentinel_{i}.parquet")
 
-    _run_to_memory(nodes["topicStream"], "t_topo_topics", "append")
-    _run_to_memory(nodes["entityOpinionStream"], "t_topo_entop", "append")
-    _run_to_memory(nodes["toxicUserStream"], "t_topo_toxic", "append")
+    queries = {
+        name: df.writeStream.outputMode("append").format("memory")
+        .queryName(f"t_topo_{name}").trigger(availableNow=True).start()
+        for name, df in nodes.items()
+    }
+    for name, q in queries.items():
+        assert q.awaitTermination(300), name
 
     batch = build_topology(lines)
-    not_sentinel = ~F.col("key").isin("__sentinel__")
+    # a sentinel row carries a sentinel event_id, key "-1" or a window
+    # near SENTINEL_TS
+    sentinel_s = F.unix_timestamp(F.lit(SENTINEL_TS).cast("timestamp"))
 
-    got_topics = spark.table("t_topo_topics").filter(not_sentinel)
-    want_topics = batch["topicStream"].select("window_start_s", "key", "count")
-    assert got_topics.count() > 0
-    assert got_topics.select(*want_topics.columns).exceptAll(want_topics).count() == 0
-    assert want_topics.exceptAll(got_topics.select(*want_topics.columns)).count() == 0
+    def real(df):
+        if "event_id" in df.columns:
+            return df.filter(F.col("event_id") < 10**9)
+        if "window_start_s" in df.columns:
+            return df.filter(F.col("window_start_s") < sentinel_s - 3600)
+        return df.filter(F.col("key") != "-1")
 
-    got_entop = spark.table("t_topo_entop").filter(not_sentinel)
-    want_entop = batch["entityOpinionStream"].select(
-        "window_start_s", "key", "value", "moodType"
-    )
-    assert got_entop.count() > 0
-    assert got_entop.select(*want_entop.columns).exceptAll(want_entop).count() == 0
-    assert want_entop.exceptAll(got_entop.select(*want_entop.columns)).count() == 0
-
-    got_toxic = (
-        spark.table("t_topo_toxic").filter(F.col("key") != "-1")
-        .toPandas().sort_values(["key", "bucket"]).reset_index(drop=True)
-    )
-    want_toxic = (
-        batch["toxicUserStream"]
-        .filter(F.col("n") == 10)  # streaming emits complete buckets only
-        .select("key", "bucket", "value", "n")
-        .toPandas().sort_values(["key", "bucket"]).reset_index(drop=True)
-    )
-    assert len(got_toxic) == len(want_toxic) > 0
-    assert (got_toxic["key"].to_numpy() == want_toxic["key"].to_numpy()).all()
-    assert np.allclose(
-        got_toxic["value"].to_numpy(), want_toxic["value"].to_numpy(), rtol=1e-9
-    )
+    assert len(nodes) == 8
+    for name in nodes:
+        # materialized: Spark cannot plan exceptAll over a batch
+        # dropDuplicates(subset) of an explode, as entityStream is
+        # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
+        got, want = real(spark.table(f"t_topo_{name}")), batch[name].localCheckpoint()
+        assert set(got.columns) == set(want.columns), name
+        got = got.select(*want.columns)
+        if not name.startswith("toxicUser"):
+            assert got.count() > 0, name
+            assert got.exceptAll(want).count() == 0, name
+            assert want.exceptAll(got).count() == 0, name
+            continue
+        # streaming emits complete buckets only, summing doubles in order
+        got = got.toPandas().sort_values(["key", "bucket"]).reset_index(drop=True)
+        want = (
+            want.filter(F.col("n") == 10)
+            .toPandas().sort_values(["key", "bucket"]).reset_index(drop=True)
+        )
+        assert len(got) == len(want) > 0, name
+        assert (got["key"].to_numpy() == want["key"].to_numpy()).all(), name
+        assert (got["bucket"].to_numpy() == want["bucket"].to_numpy()).all(), name
+        assert np.allclose(
+            got["value"].to_numpy(), want["value"].to_numpy(), rtol=1e-9
+        ), name
 
 
 def test_streaming_trending_via_foreach_batch(spark, tmp_path):
@@ -422,18 +427,14 @@ def test_streaming_trending_via_foreach_batch(spark, tmp_path):
     store per micro-batch; share-of-window ratios derived from the
     final store equal the batch trending query."""
     import pandas as pd
-    from sparksent.streaming import streaming_tumbling_agg
     from sparksent.streaming.sinks import foreach_batch_upsert
 
     replay = str(tmp_path / "trend_replay")
     ev = load_table(spark, SF_DIR_SMALL, "events")
     write_replay_chunks(ev, replay, N_CHUNKS)
 
-    stream = file_replay_source(spark, replay)
-    counts = streaming_tumbling_agg(
-        stream, ["event_type"], 10, [F.count("*").alias("count")],
-        watermark="10 seconds",
-    )
+    stream = file_replay_source(spark, replay).withWatermark("ts", "10 seconds")
+    counts = windows.window_agg(stream, ["event_type"], 10, [F.count("*").alias("count")])
     store: dict = {}
     q = foreach_batch_upsert(
         counts, store, ["window_start_s", "event_type"], available_now=True
@@ -568,17 +569,13 @@ def test_parquet_keyed_merge_equivalence(spark, replay_dir, tmp_path):
     into a bucket-partitioned parquet store across micro-batches; the
     final store equals the batch aggregate (and holds exactly one row
     per key — later updates replaced earlier ones)."""
-    from sparksent.streaming import streaming_tumbling_agg
     from sparksent.streaming.sinks import parquet_keyed_merge
 
     store_path = str(tmp_path / "merge_store")
     stream = file_replay_source(spark, replay_dir).filter(
         F.col("event_type") != "__sentinel__"
-    )
-    counts = streaming_tumbling_agg(
-        stream, ["event_type"], 10, [F.count("*").alias("count")],
-        watermark="10 seconds",
-    )
+    ).withWatermark("ts", "10 seconds")
+    counts = windows.window_agg(stream, ["event_type"], 10, [F.count("*").alias("count")])
     q = parquet_keyed_merge(
         counts, store_path, ["window_start_s", "event_type"], available_now=True
     )
@@ -592,7 +589,7 @@ def test_parquet_keyed_merge_equivalence(spark, replay_dir, tmp_path):
         .filter(F.col("count") > 1).count() == 0
     )
     ev = load_table(spark, SF_DIR_SMALL, "events")
-    want = windows.tumbling_agg(
+    want = windows.window_agg(
         ev, ["event_type"], 10, [F.count("*").alias("count")]
     )
     assert got.exceptAll(want).count() == 0
