@@ -113,56 +113,36 @@ MIN_CLASSIFY_TOKENS = 25  # the reference's word-count guard (SA.scala:129)
 # ---------------------------------------------------------------------------
 
 
-def _weight_map() -> Column:
-    return F.create_map(*[F.lit(x) for kv in LEXICON.items() for x in kv])
-
-
 def _weight_map_expr() -> str:
-    """Spark-SQL text of the lexicon map literal — the same map
-    `_weight_map` builds, as ONE parseable string.  Column-object
-    construction of the map + the aggregate lambda costs ~100 py4j
-    round trips per call site (~0.1 s of driver plan-build time per
-    consumer query, measured by cProfile: the time is
-    socket.recv_into); a single F.expr is one round trip and yields
+    """Spark-SQL text of the lexicon map literal, as ONE parseable
+    string.  Column-object construction of the map + the aggregate
+    lambda costs ~100 py4j round trips per call site (~0.1 s of driver
+    plan-build time per consumer query, measured by cProfile: the time
+    is socket.recv_into); a single F.expr is one round trip and yields
     the same Catalyst expression (guide §7.3: plan-construction time
     is driver-side, single-threaded work)."""
     return "map(" + ", ".join(f"'{w}', {k}" for w, k in LEXICON.items()) + ")"
 
 
-def tokens(text: Column | str) -> Column:
-    t = F.col(text) if isinstance(text, str) else text
-    return F.split(t, " ")
+def tokens(text: str) -> Column:
+    return F.split(F.col(text), " ")
 
 
-def score_raw(text: Column | str) -> Column:
-    """Sum of lexicon weights over the tokens (BIGINT)."""
-    if isinstance(text, str):
-        return F.expr(
-            f"aggregate(split(`{text}`, ' '), CAST(0 AS BIGINT), "
-            f"(acc, w) -> acc + coalesce("
-            f"try_element_at({_weight_map_expr()}, w), 0))"
-        )
-    m = _weight_map()
-    return F.aggregate(
-        tokens(text),
-        F.lit(0).cast("long"),
-        lambda acc, w: acc + F.coalesce(F.try_element_at(m, w), F.lit(0)),
+def score_raw(text: str) -> Column:
+    """Sum of lexicon weights over the tokens of column ``text`` (BIGINT)."""
+    return F.expr(
+        f"aggregate(split(`{text}`, ' '), CAST(0 AS BIGINT), "
+        f"(acc, w) -> acc + coalesce("
+        f"try_element_at({_weight_map_expr()}, w), 0))"
     )
 
 
-def magnitude_raw(text: Column | str) -> Column:
-    """Sum of |lexicon weights| over the tokens (BIGINT)."""
-    if isinstance(text, str):
-        return F.expr(
-            f"aggregate(split(`{text}`, ' '), CAST(0 AS BIGINT), "
-            f"(acc, w) -> acc + abs(coalesce("
-            f"try_element_at({_weight_map_expr()}, w), 0)))"
-        )
-    m = _weight_map()
-    return F.aggregate(
-        tokens(text),
-        F.lit(0).cast("long"),
-        lambda acc, w: acc + F.abs(F.coalesce(F.try_element_at(m, w), F.lit(0))),
+def magnitude_raw(text: str) -> Column:
+    """Sum of |lexicon weights| over the tokens of column ``text`` (BIGINT)."""
+    return F.expr(
+        f"aggregate(split(`{text}`, ' '), CAST(0 AS BIGINT), "
+        f"(acc, w) -> acc + abs(coalesce("
+        f"try_element_at({_weight_map_expr()}, w), 0)))"
     )
 
 

@@ -231,9 +231,11 @@ def q_entity_opinion(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ride the broadcast join — never on the event stream."""
     d_ents = (
         scored_docs(spark, sf_dir)
-        .select("doc_id", "score_raw", F.explode(nlp.tokens("text")).alias("key"))
+        .select(
+            "doc_id", "score_raw",
+            F.explode(F.array_distinct(nlp.tokens("text"))).alias("key"),
+        )
         .filter(F.col("key").isin(*nlp.ENTITIES))
-        .distinct()
     )
     ents = (
         _events_keyed(spark, sf_dir)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ext.dedup import minhash_bands, minhash_signatures, signature_agreement
+from .sinks import _store_exists
 
 
 def minhash_band_index(
@@ -87,52 +88,6 @@ def streaming_neardup_candidates(
 
 
 NEARDUP_INDEX_BUCKETS = 64  # default (band, bsig)-hash bucket count
-
-
-def _index_exists(spark, path: str) -> bool:
-    """Explicit existence probe via the Hadoop FileSystem API (works
-    for any URI scheme the session can read).  ADVICE r9: the old bare
-    ``except Exception`` around ``spark.read.parquet`` treated a
-    CORRUPT or transiently unreadable index as "no index yet", silently
-    skipping the vs-index check while still appending — permanently
-    losing pairs.  With the explicit probe, a present-but-unreadable
-    index RAISES (the micro-batch fails and is retried) instead of
-    emitting nothing.
-
-    ADVICE r10 refinements:
-    - a present-but-EMPTY directory (no data files — e.g. a bare mkdir
-      left by an aborted first write) is "no index yet", NOT an error:
-      raising "unable to infer schema" on every retry would turn a
-      non-transient state into a permanent micro-batch failure loop;
-    - under Spark Connect there is no py4j gateway (``spark._jvm``
-      raises), so fall back to classifying the read-side
-      AnalysisException instead of probing the FileSystem."""
-    try:
-        jvm, jsc = spark._jvm, spark._jsc
-    except Exception:  # Spark Connect: no py4j gateway on the client
-        jvm = jsc = None
-    if jvm is not None:
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return False
-        it = fs.listFiles(jpath, True)  # recursive: data lives in kbucket= dirs
-        while it.hasNext():
-            name = it.next().getPath().getName()
-            if not (name.startswith("_") or name.startswith(".")):
-                return True  # at least one data file: index present
-        return False  # exists but holds no data files: no index yet
-    # Spark Connect fallback: attempt the schema read and classify.
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except AnalysisException as e:
-        cond = getattr(e, "getErrorClass", lambda: None)() or str(e)
-        if "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond:
-            return False  # missing, or existing-but-empty
-        raise  # corrupt/unreadable: fail the micro-batch (retryable)
 
 
 def write_neardup_index(
@@ -309,7 +264,7 @@ def _admit_bands(
     ]
     outputs = []
     old = None
-    if _index_exists(spark, index_path):
+    if _store_exists(spark, index_path):
         # one pruned read (partition pruning on kbucket) feeds both the
         # probe join and the merge — localCheckpoint so the touched
         # buckets are SCANNED once, not once per consumer (measured

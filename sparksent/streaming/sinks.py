@@ -72,6 +72,51 @@ def foreach_batch_upsert(
     return to_foreach_batch(df, fn, mode, available_now=available_now)
 
 
+def _store_exists(spark, path: str) -> bool:
+    """Whether a parquet store at ``path`` holds any data file: the
+    one "first batch?" probe of the merge sinks (:func:`parquet_keyed_merge`
+    and the near-dup admission index). It asks the Hadoop FileSystem
+    API (any URI scheme the session can read) instead of reading the
+    store inside ``try/except``: that classified a CORRUPT, unreadable
+    or schema-mismatched store as "no store yet", so the sink silently
+    overwrote or skipped data. With the probe, a present store whose
+    read or merge fails RAISES (the micro-batch fails and is retried).
+
+    - A present-but-EMPTY directory (no data files, e.g. a bare mkdir
+      left by an aborted first write) is "no store yet", NOT an error:
+      raising "unable to infer schema" on every retry would turn a
+      non-transient state into a permanent micro-batch failure loop.
+    - Under Spark Connect there is no py4j gateway (``spark._jvm``
+      raises), so fall back to classifying the read-side
+      AnalysisException instead of probing the FileSystem."""
+    try:
+        jvm, jsc = spark._jvm, spark._jsc
+    except Exception:  # Spark Connect: no py4j gateway on the client
+        jvm = jsc = None
+    if jvm is not None:
+        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(jsc.hadoopConfiguration())
+        if not fs.exists(jpath):
+            return False
+        it = fs.listFiles(jpath, True)  # recursive: data lives in kbucket= dirs
+        while it.hasNext():
+            name = it.next().getPath().getName()
+            if not (name.startswith("_") or name.startswith(".")):
+                return True  # at least one data file: store present
+        return False  # exists but holds no data files: no store yet
+    # Spark Connect fallback: attempt the schema read and classify.
+    from pyspark.errors import AnalysisException
+
+    try:
+        spark.read.parquet(path).schema
+        return True
+    except AnalysisException as e:
+        cond = getattr(e, "getErrorClass", lambda: None)() or str(e)
+        if "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond:
+            return False  # missing, or existing-but-empty
+        raise  # corrupt/unreadable: fail the micro-batch (retryable)
+
+
 def parquet_keyed_merge(
     df: DataFrame,
     path: str,
@@ -141,9 +186,8 @@ def parquet_keyed_merge(
         touched = [r[0] for r in delta.select("kbucket").distinct().collect()]
         if not touched:
             return
-        from pyspark.errors import AnalysisException
-
-        try:
+        merged = delta  # first batch: the store does not exist yet
+        if _store_exists(spark, path):
             old = spark.read.parquet(path).filter(F.col("kbucket").isin(touched))
             kept = old.join(
                 F.broadcast(delta.select(*key_cols).distinct()),
@@ -151,8 +195,6 @@ def parquet_keyed_merge(
                 "left_anti",
             )
             merged = kept.unionByName(delta)
-        except AnalysisException:  # first batch: store does not exist yet
-            merged = delta
         (
             merged.localCheckpoint()
             .repartition("kbucket")

@@ -30,6 +30,9 @@ Structured Streaming's unified model:
     forms (raw per-message/per-entity moods; channel toxicity keyed by
     channel) are the ``*StreamIntent`` nodes.
 
+    entityStream is stateless, like the reference's per-message
+    ``flatMap``: a message emits one row per DISTINCT entity token.
+
 Every node is a lazily-composed DataFrame; "execute" is whatever action
 the caller runs — Catalyst sees the whole DAG and shares the scan.
 Fan-out reuses the parent plan by reference exactly like the reference's
@@ -79,8 +82,16 @@ def _shared_streams(msgs: DataFrame, sentiment: DataFrame) -> dict[str, DataFram
     requires; on a batch frame Spark removes ``withWatermark`` from the
     plan. entityStream's watermark follows the entity filter, so
     the entity streams' event time advances only on entity-bearing
-    lines. Its ``dropDuplicates`` keys, (event_id, key), hold no event
-    time, so that state is never expired.
+    lines.
+
+    entityStream explodes each message's distinct tokens, so an entity
+    counts once per message without state, as in the reference's
+    per-message ``flatMap``. Being stateless, it drops no row behind the
+    watermark (the windowed aggregates over it still do), and two
+    identical lines in one socket or Kafka micro-batch, which share
+    ``event_id = xxhash64(line, ts)``, each emit their own entity rows.
+    Entity-stream checkpoints written when an (event_id, key) dedup ran
+    here do not restore: that state operator is gone.
     """
     # parsedStream (SA.scala:44-48): 1s windowed concat
     parsed = windows.window_agg(
@@ -91,11 +102,10 @@ def _shared_streams(msgs: DataFrame, sentiment: DataFrame) -> dict[str, DataFram
     entities = (
         sentiment.select(
             "channel", "user", "ts", "event_id", "score_raw",
-            F.explode(nlp.tokens("text")).alias("key"),
+            F.explode(F.array_distinct(nlp.tokens("text"))).alias("key"),
         )
         .filter(F.col("key").isin(*nlp.ENTITIES))
         .withWatermark("ts", WATERMARK)
-        .dropDuplicates(["event_id", "key"])
     )
     channels = sentiment.select(F.col("channel").alias("key"), "ts", "score_raw")
     return {
@@ -209,7 +219,7 @@ def build_streaming_topology(lines: DataFrame) -> dict[str, DataFrame]:
     - sentimentStream: stateless enrichment;
     - parsedStream / entityStream / topicStream / entityOpinionStream /
       channelMoodStream: :func:`_shared_streams`, watermarked windowed
-      aggs and the per-(message, entity) dedup;
+      aggs over a stateless per-message entity explode;
     - toxicUserStream: the literal cumulative-mood count window fused
       into ONE applyInPandasWithState operator (two chained arbitrary
       stateful operators are unsupported — streaming/count_window.py);

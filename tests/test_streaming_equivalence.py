@@ -338,7 +338,8 @@ def test_streaming_topology_equivalence(spark, tmp_path):
     ).first()
     # "troll" posts 12 lines of mood -1.2: one complete toxic count window
     # of its raw moods (toxicUserStreamIntent) and of its running totals
-    texts = ["spark fast", "stream join hash", "table sort dup"]
+    # "spark fast spark" repeats an entity: it still counts once per line
+    texts = ["spark fast spark", "stream join hash", "table sort dup"]
     extra = []
     for f in range(2):
         rows = [
@@ -381,6 +382,16 @@ def test_streaming_topology_equivalence(spark, tmp_path):
     }
     for name, q in queries.items():
         assert q.awaitTermination(300), name
+    # the entity explode is stateless; topic and entity-opinion keep
+    # only their windowed aggregate's state
+    n_state_ops = {
+        name: len(q.lastProgress["stateOperators"]) for name, q in queries.items()
+    }
+    assert n_state_ops == {
+        "sentimentStream": 0, "parsedStream": 1, "entityStream": 0, "topicStream": 1,
+        "entityOpinionStream": 1, "channelMoodStream": 1, "toxicUserStream": 1,
+        "toxicUserStreamIntent": 1,
+    }, n_state_ops
 
     batch = build_topology(lines)
     # a sentinel row carries a sentinel event_id, key "-1" or a window
@@ -396,10 +407,7 @@ def test_streaming_topology_equivalence(spark, tmp_path):
 
     assert len(nodes) == 8
     for name in nodes:
-        # materialized: Spark cannot plan exceptAll over a batch
-        # dropDuplicates(subset) of an explode, as entityStream is
-        # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
-        got, want = real(spark.table(f"t_topo_{name}")), batch[name].localCheckpoint()
+        got, want = real(spark.table(f"t_topo_{name}")), batch[name]
         assert set(got.columns) == set(want.columns), name
         got = got.select(*want.columns)
         if not name.startswith("toxicUser"):
@@ -603,6 +611,33 @@ def test_parquet_keyed_merge_equivalence(spark, replay_dir, tmp_path):
     for d in _glob.glob(store_path + "/kbucket=*"):
         n = len(_glob.glob(d + "/*.parquet"))
         assert n == 1, (_os.path.basename(d), n)
+
+
+def test_parquet_keyed_merge_fails_on_schema_mismatch(spark, tmp_path):
+    """A delta whose schema differs from the store's fails the
+    micro-batch; it must not be taken for the first batch, which would
+    overwrite the touched buckets with the delta alone."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import types as T
+
+    from sparksent.streaming.sinks import parquet_keyed_merge
+
+    store_path = str(tmp_path / "merge_store")
+
+    def merge(rows, cols, name):
+        src = str(tmp_path / name)
+        schema = T.StructType([T.StructField(c, T.LongType()) for c in cols])
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+        stream = file_replay_source(spark, src, schema=schema)
+        return parquet_keyed_merge(stream, store_path, ["k"], mode="append", available_now=True)
+
+    merge([(k, k) for k in range(50)], ["k", "v"], "first").awaitTermination(120)
+    assert spark.read.parquet(store_path).count() == 50
+    q = merge([(0, 1, 1), (1, 2, 2)], ["k", "v", "extra"], "mismatched")
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    got = spark.read.parquet(store_path).select("k", "v")
+    assert sorted(map(tuple, got.collect())) == [(k, k) for k in range(50)]
 
 
 def test_compact_bucketed_store_result_identical(spark, tmp_path):
