@@ -1,11 +1,14 @@
 """``session.get_spark`` sizing, in a fresh process: an in-process call
-would reuse and reconfigure the shared test session."""
+would reuse and reconfigure the shared test session. Batch shuffles get
+``cpus`` partitions; streaming state gets ``STATE_PARTITIONS``."""
 
 from __future__ import annotations
 
 import os
 import subprocess
 import sys
+
+from sparksent.session import STATE_PARTITIONS
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -16,7 +19,8 @@ def test_get_spark_cpus_sizes_master_and_shuffle_partitions():
     code = (
         "from sparksent.session import get_spark\n"
         "s = get_spark('cpus-probe', cpus=2)\n"
-        "print(s.sparkContext.master, s.conf.get('spark.sql.shuffle.partitions'))\n"
+        "print(s.sparkContext.master, s.conf.get('spark.sql.shuffle.partitions'),\n"
+        "      s.conf.get('spark.sql.streaming.internal.stateStore.partitions'))\n"
         "s.stop()\n"
     )
     out = subprocess.run(
@@ -24,4 +28,4 @@ def test_get_spark_cpus_sizes_master_and_shuffle_partitions():
         capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    assert out.stdout.split()[-2:] == ["local[2]", "2"]
+    assert out.stdout.split()[-3:] == ["local[2]", "2", str(STATE_PARTITIONS)]

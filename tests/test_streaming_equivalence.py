@@ -11,6 +11,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparksent import windows
+from sparksent.session import STATE_PARTITIONS
 from sparksent.streaming import (
     file_replay_source,
     streaming_count_window,
@@ -392,6 +393,14 @@ def test_streaming_topology_equivalence(spark, tmp_path):
         "entityOpinionStream": 1, "channelMoodStream": 1, "toxicUserStream": 1,
         "toxicUserStreamIntent": 1,
     }, n_state_ops
+    # every state operator runs the session's streaming state partitions,
+    # not spark.sql.shuffle.partitions
+    n_parts = {
+        (name, op["operatorName"]): op["numShufflePartitions"]
+        for name, q in queries.items()
+        for op in q.lastProgress["stateOperators"]
+    }
+    assert set(n_parts.values()) == {STATE_PARTITIONS}, n_parts
 
     batch = build_topology(lines)
     # a sentinel row carries a sentinel event_id, key "-1" or a window
@@ -1477,6 +1486,42 @@ def test_toxicity_state_survives_checkpoint_restart(spark, tmp_path):
     got = sorted(tuple(r) for r in got_df.collect())
     want = sorted(tuple(r) for r in spark.table("t_tox_ref_rs").collect())
     assert got == want and len(got) > 0  # multiset: dup re-emission fails
+
+
+def test_state_partitions_kept_by_checkpoint(spark, tmp_path):
+    """A checkpoint keeps the state-partition count it was written with.
+    A stateful query started on a session with 4 state partitions and
+    restarted from its checkpoint on the main session still runs 4, and
+    its restored state gives exact counts; a fresh checkpoint on the
+    main session gets ``STATE_PARTITIONS``."""
+    import os
+
+    replay = str(tmp_path / "sp_replay")
+    held = str(tmp_path / "sp_held")
+    os.makedirs(held)
+    ev = load_table(spark, SF_DIR_SMALL, "events")
+    _, second = write_replay_chunks(ev, replay, 2)
+    os.rename(second, os.path.join(held, os.path.basename(second)))
+    four = spark.newSession()
+    four.conf.set("spark.sql.streaming.internal.stateStore.partitions", "4")
+
+    def run(session, ckpt, name):
+        q = (
+            file_replay_source(session, replay).groupBy("user_id").count()
+            .writeStream.outputMode("complete").format("memory").queryName(name)
+            .option("checkpointLocation", str(tmp_path / ckpt))
+            .trigger(availableNow=True).start()
+        )
+        assert q.awaitTermination(120), name
+        return {op["numShufflePartitions"] for op in q.lastProgress["stateOperators"]}
+
+    assert run(four, "sp_ckpt", "t_sp_four") == {4}
+    os.rename(os.path.join(held, os.path.basename(second)), second)
+    assert run(spark, "sp_ckpt", "t_sp_restart") == {4}
+    assert run(spark, "sp_fresh", "t_sp_fresh") == {STATE_PARTITIONS}
+    want = sorted(tuple(r) for r in ev.groupBy("user_id").count().collect())
+    for name in ("t_sp_restart", "t_sp_fresh"):
+        assert sorted(tuple(r) for r in spark.table(name).collect()) == want, name
 
 
 def test_space_saving_exact_regime_equals_batch_counts(spark, tmp_path):
