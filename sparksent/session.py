@@ -21,6 +21,10 @@ the *same* logical plans scale to a real cluster:
   Spark itself falls back to this manager on filesystems without
   FileContext support, and a POSIX rename on local disk is atomic. It is
   set here, at construction, and never by a library call.
+- Parquet ``TIMESTAMP(NANOS)`` columns read as raw int64 nanoseconds
+  (``nanosAsLong``), which Spark 4 reads no other way;
+  ``tables.load_table`` converts them. Set here once, like the
+  checkpoint manager, rather than by every ``events`` load.
 
 Streaming state partitions
 --------------------------
@@ -96,6 +100,7 @@ def get_spark(app_name: str = "sparksent", cpus: int | None = None) -> SparkSess
         .config(
             "spark.sql.streaming.internal.stateStore.partitions", str(STATE_PARTITIONS)
         )
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/sparksent-warehouse"),

@@ -20,9 +20,15 @@ DataFrame. This package holds the parts that ARE streaming-specific:
   (an ``ordered_fold``) and watermark-windowed (its own event-time
   timeout function); a domain quota is a unit-cost token budget
 - sinks.py:   console (the reference's only sink), memory (tests),
-  parquet, foreachBatch
-- neardup.py: incremental new-vs-corpus MinHash dedup (stream-static
-  band join against a precomputed corpus index)
+  parquet, foreachBatch, the bucketed keyed merge; every batch-keyed
+  sink writes by dynamic partition overwrite, so replays are idempotent
+- neardup.py: incremental near-dup detection, one signature→band
+  description per modality (MinHash, image pHash, audio fingerprint,
+  video frame hash, winnowing): ``band_index`` builds the corpus index,
+  ``admit_batch`` is the self-maintaining foreachBatch admission loop;
+  plus the fixed-index MinHash join and streaming decontamination
+- annserve.py: top-k serving of a query-vector stream against an
+  at-rest trained-IVF index
 - ivf_route.py: route incoming embeddings to their trained IVF cell
   (stateless broadcast-argmin projection; admission control for the
   vector index)
@@ -33,19 +39,11 @@ from .ivf_route import (  # noqa: F401
     route_to_cells,
 )
 from .neardup import (  # noqa: F401
-    audio_fp_admit_batch,
-    audio_fp_band_index,
+    admit_batch,
+    band_index,
     benchmark_gram_index,
     decontaminate_stream_batch,
-    image_phash_admit_batch,
-    image_phash_band_index,
-    minhash_band_index,
-    neardup_admit_batch,
     streaming_neardup_candidates,
-    video_framehash_admit_batch,
-    video_framehash_band_index,
-    winnowing_admit_batch,
-    winnowing_band_index,
     write_neardup_index,
 )
 from .annserve import (  # noqa: F401

@@ -30,6 +30,7 @@ from ..ext.similarity import (
     norm,
     nprobe_for,
 )
+from .sinks import _overwrite_partitions
 
 
 def write_ivf_index(
@@ -151,13 +152,11 @@ def ivf_serve_batch(
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    (
+    _overwrite_partitions(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim_r"))
-        .withColumn("query_batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .partitionBy("query_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(out_path)
+        .withColumn("query_batch", F.lit(int(batch_id))),
+        "query_batch",
+        out_path,
     )

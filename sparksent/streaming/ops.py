@@ -12,7 +12,9 @@ differ from batch:
   than per record; the batch cumulative form reproduces the per-record
   history exactly (documented delta, SURVEY.md §2.6.3);
 - exact dedup, the stream-stream interval join and the HLL register
-  table, each with watermark-bounded state.
+  table, each with watermark-bounded state. As with ``window_agg``, the
+  join and the register table never set a watermark themselves: the
+  caller's ``withWatermark`` bounds their state.
 
 State sizing at scale: windowed-agg state is O(open windows × keys) and
 the watermark expires it; update-mode running sums are O(keys). Both are
@@ -81,7 +83,6 @@ def streaming_interval_join(
     within: str,
     left_ts: str,
     right_ts: str,
-    watermark: str = "1 minute",
 ) -> DataFrame:
     """Stream-stream inner interval join: pair each left row with the
     right rows of the same key whose timestamp falls in
@@ -89,17 +90,16 @@ def streaming_interval_join(
     differently on the two sides (both survive into the output).
 
     Matches emit as soon as both rows have arrived; the time bound plus
-    the two watermarks let the state store drop buffered rows once they
-    can no longer match — the condition Structured Streaming requires
-    for bounded stream-stream join state."""
-    l = left.withWatermark(left_ts, watermark)
-    r = right.withWatermark(right_ts, watermark)
+    a caller's ``withWatermark`` on each side let the state store drop
+    buffered rows once they can no longer match — the condition
+    Structured Streaming requires for bounded stream-stream join
+    state."""
     cond = (
-        (l[on] == r[on])
-        & (r[right_ts] >= l[left_ts] - F.expr(f"INTERVAL {within}"))
-        & (r[right_ts] <= l[left_ts])
+        (left[on] == right[on])
+        & (right[right_ts] >= left[left_ts] - F.expr(f"INTERVAL {within}"))
+        & (right[right_ts] <= left[left_ts])
     )
-    return l.join(r, cond).drop(r[on])
+    return left.join(right, cond).drop(right[on])
 
 
 def streaming_hll_registers(
@@ -108,12 +108,12 @@ def streaming_hll_registers(
     size_s: int,
     value_col: str,
     ts_col: str = "ts",
-    watermark: str = "10 seconds",
 ) -> DataFrame:
     """Streaming HLL: the stream maintains the SKETCH REGISTERS as its
-    only state — a watermarked (window, keys, bucket) -> max(rho)
-    aggregation, i.e. exactly the sketch-merge operation, bounded at
-    256 rows per (window, key) and expired by the watermark. Estimates
+    only state — a (window, keys, bucket) -> max(rho) aggregation over
+    a stream whose ``ts_col`` carries the caller's ``withWatermark``,
+    i.e. exactly the sketch-merge operation, bounded at 256 rows per
+    (window, key) and expired by the watermark. Estimates
     are finalized from stored registers at read time
     (``sketches.hll_finalize``) — the production layout, since register
     tables also merge across windows/streams losslessly. Equivalence to
@@ -123,9 +123,7 @@ def streaming_hll_registers(
     from ..ext.sketches import HLL_M, HLL_P, _rho
 
     h = h60(F.col(value_col).cast("string"))
-    regs = (
-        df.withColumn("bucket", h % HLL_M)
-        .withColumn("rho", _rho(F.shiftright(h, HLL_P)))
-        .withWatermark(ts_col, watermark)
+    regs = df.withColumn("bucket", h % HLL_M).withColumn(
+        "rho", _rho(F.shiftright(h, HLL_P))
     )
     return window_agg(regs, [*keys, "bucket"], size_s, [F.max("rho").alias("mj")], ts_col)

@@ -72,6 +72,22 @@ def foreach_batch_upsert(
     return to_foreach_batch(df, fn, mode, available_now=available_now)
 
 
+def _overwrite_partitions(df: DataFrame, col: str, path: str) -> None:
+    """Write ``df`` into the parquet store at ``path`` partitioned by
+    ``col``, replacing only the ``col`` partitions ``df`` holds rows for
+    (dynamic partition overwrite). Every foreachBatch sink here writes
+    this way, keyed on its batch id or on the buckets it touched, so a
+    replayed micro-batch rewrites its own partitions instead of
+    appending twice: the sink stays exactly-once under Structured
+    Streaming's at-least-once replay."""
+    (
+        df.write.mode("overwrite")
+        .partitionBy(col)
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
+
+
 def _store_exists(spark, path: str) -> bool:
     """Whether a parquet store at ``path`` holds any data file: the
     one "first batch?" probe of the merge sinks (:func:`parquet_keyed_merge`
@@ -195,13 +211,8 @@ def parquet_keyed_merge(
                 "left_anti",
             )
             merged = kept.unionByName(delta)
-        (
-            merged.localCheckpoint()
-            .repartition("kbucket")
-            .write.mode("overwrite")
-            .partitionBy("kbucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
+        _overwrite_partitions(
+            merged.localCheckpoint().repartition("kbucket"), "kbucket", path
         )
 
     return to_foreach_batch(df, fn, mode, available_now=available_now)
@@ -221,7 +232,7 @@ def compact_bucketed_store(
 
     Both in-repo writers already bound themselves to one file per
     touched bucket per merge (the ``repartition(bucket_col)`` guard in
-    :func:`parquet_keyed_merge` and ``neardup._admit_bands``), so a
+    :func:`parquet_keyed_merge` and ``neardup.admit_batch``), so a
     store THEY maintain never triggers this; it exists for stores
     seeded or co-written by engines without the guard, and as the
     periodic safety valve a long-lived production index schedules
@@ -264,11 +275,5 @@ def compact_bucketed_store(
         .filter(F.col(bucket_col).isin(offenders))
         .localCheckpoint()
     )
-    (
-        rows.repartition(bucket_col)
-        .write.mode("overwrite")
-        .partitionBy(bucket_col)
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )
+    _overwrite_partitions(rows.repartition(bucket_col), bucket_col, path)
     return offenders

@@ -136,7 +136,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # The events fixture's physical `ts` type has varied across driver
         # generations: parquet TIMESTAMP(NANOS) (which Spark 4 only reads
-        # via the nanosAsLong legacy conf, as raw int64 ns) and
+        # via the nanosAsLong legacy conf, as raw int64 ns — session.get_spark
+        # sets it; a session without it cannot read such a file) and
         # TIMESTAMP_MICROS isAdjustedToUTC=0 (which Spark reads as
         # TIMESTAMP_NTZ). Branch on the *read* schema so either works:
         #   - LongType      -> exact integer ns->us truncation, matching
@@ -151,8 +152,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         #                      arithmetic (timestampdiff between two NTZ
         #                      values), timezone-proof by construction and
         #                      identical to DuckDB's epoch_us(ts).
-        # Keep the conf set: harmless on MICROS files, needed on NANOS.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
         ts_type = df.schema["ts"].dataType.typeName()
         if ts_type == "long":

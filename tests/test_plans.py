@@ -2772,6 +2772,32 @@ def test_pinned_by_partitioning_survives_checkpoint(spark):
     assert count_data_shuffles(agg_plan(plain)) == 1
 
 
+def test_pinned_restores_aqe_when_pin_raises(spark):
+    """tables.pinned turns the session-global spark.sql.adaptive.enabled
+    off while its pin compiles (the flip cannot move to a child session:
+    re-planning a frame there needs the private ``Dataset.ofRows``).  So
+    the caller's value must come back on every path: after an eager pin
+    whose job raises, and after one that succeeds — and a caller's
+    ``false`` must stay ``false``, never be restored to ``true``."""
+    from pyspark.sql import functions as F
+
+    from sparksent.tables import pinned
+
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    failing = spark.range(3).select(F.raise_error(F.lit("pin failed")).alias("x"))
+    try:
+        for setting in ("true", "false"):
+            spark.conf.set(key, setting)
+            with pytest.raises(Exception, match="pin failed"):
+                pinned(failing)
+            assert spark.conf.get(key) == setting
+            assert pinned(spark.range(3)).count() == 3
+            assert spark.conf.get(key) == setting
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_semdedup_single_corpus_pass_and_copartitioned_pairs(spark):
     """SemDeDup's round-16 shape: the corpus is derived ONCE (the carry
     pin — no parquet scan survives into the final plan; every leaf is a

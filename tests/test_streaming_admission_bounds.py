@@ -44,16 +44,14 @@ def collect_sizes(monkeypatch):
 def test_neardup_admission_collects_at_most_n_buckets(
     spark, tmp_path, collect_sizes
 ):
-    """neardup_admit_batch's only driver pull is the touched-bucket
-    list: kbucket = pmod(hash(band, bsig), n_buckets), so EVERY collect
-    in the admission path is bounded by min(n_buckets, batch_rows x
-    BANDS) regardless of corpus or index size."""
+    """admit_batch's only driver pull is the touched-bucket list:
+    kbucket = pmod(hash(band, bsig), n_buckets), so EVERY collect in
+    the admission path is bounded by min(n_buckets, batch band rows)
+    regardless of corpus or index size.  Run for MinHash (BANDS
+    positional bands per document) and winnowing (one band row per
+    fingerprint), the two bandings of the shared admission core."""
     from sparksent.ext.dedup import BANDS
-    from sparksent.streaming import (
-        minhash_band_index,
-        neardup_admit_batch,
-        write_neardup_index,
-    )
+    from sparksent.streaming import admit_batch, band_index, write_neardup_index
     from sparksent.tables import load_table
 
     docs = load_table(spark, SF_DIR_SMALL, "documents").select("doc_id", "text")
@@ -67,21 +65,27 @@ def test_neardup_admission_collects_at_most_n_buckets(
     assert batch_rows > 0
 
     n_buckets = 16
-    index_path = str(tmp_path / "bound_index")
-    out_path = str(tmp_path / "bound_out")
-    write_neardup_index(minhash_band_index(corpus), index_path, n_buckets=n_buckets)
+    for modality in ("minhash", "winnowing"):
+        index_path = str(tmp_path / f"{modality}_index")
+        out_path = str(tmp_path / f"{modality}_out")
+        write_neardup_index(
+            band_index(corpus, modality), index_path, n_buckets=n_buckets
+        )
+        band_rows = band_index(batch, modality).count()
+        if modality == "minhash":
+            assert band_rows == batch_rows * BANDS
 
-    collect_sizes.clear()
-    neardup_admit_batch(
-        batch, index_path, out_path, batch_id=0, n_buckets=n_buckets
-    )
-    assert collect_sizes, "admission made no driver pull — did the path change?"
-    bound = min(n_buckets, batch_rows * BANDS)
-    assert all(s <= bound for s in collect_sizes), (
-        f"driver-side collect exceeded the touched-bucket bound "
-        f"min(n_buckets={n_buckets}, batch x bands={batch_rows * BANDS}): "
-        f"{collect_sizes}"
-    )
+        collect_sizes.clear()
+        admit_batch(
+            batch, modality, index_path, out_path, batch_id=0, n_buckets=n_buckets
+        )
+        assert collect_sizes, "admission made no driver pull — did the path change?"
+        bound = min(n_buckets, band_rows)
+        assert all(s <= bound for s in collect_sizes), (
+            f"{modality}: driver-side collect exceeded the touched-bucket "
+            f"bound min(n_buckets={n_buckets}, band rows={band_rows}): "
+            f"{collect_sizes}"
+        )
 
 
 def test_annserve_collects_at_most_batch_times_nprobe(

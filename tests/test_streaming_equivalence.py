@@ -294,7 +294,11 @@ def test_interval_join_equivalence(spark, tmp_path):
         return p, v
 
     sp, sv = split(file_replay_source(spark, replay))
-    out = streaming_interval_join(sp, sv, "user_id", "1 hour", "p_ts", "v_ts")
+    out = streaming_interval_join(
+        sp.withWatermark("p_ts", "1 minute"),
+        sv.withWatermark("v_ts", "1 minute"),
+        "user_id", "1 hour", "p_ts", "v_ts",
+    )
     _run_to_memory(out, "t_ij", "append")
     got = spark.table("t_ij").select("purchase_id", "view_id")
 
@@ -703,13 +707,13 @@ def test_streaming_neardup_vs_batch(spark, tmp_path):
     pairs — the incremental operator finds exactly the cross pairs the
     batch self-join finds."""
     from sparksent.ext.dedup import minhash_lsh_pairs
-    from sparksent.streaming import minhash_band_index, streaming_neardup_candidates
+    from sparksent.streaming import band_index, streaming_neardup_candidates
     from sparksent.tables import load_table
 
     docs = load_table(spark, SF_DIR_SMALL, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     newdocs = docs.filter(F.col("doc_id") % 2 == 1)
-    index = minhash_band_index(corpus).localCheckpoint()
+    index = band_index(corpus, "minhash").localCheckpoint()
 
     replay = str(tmp_path / "neardup_replay")
     write_replay_chunks(newdocs, replay, N_CHUNKS, order_col="doc_id")
@@ -753,7 +757,9 @@ def test_streaming_hll_registers_equivalence(spark, replay_dir):
 
     _add_sentinels(spark, replay_dir)
     stream = file_replay_source(spark, replay_dir)
-    regs = streaming_hll_registers(stream, ["event_type"], 100, "user_id")
+    regs = streaming_hll_registers(
+        stream.withWatermark("ts", "10 seconds"), ["event_type"], 100, "user_id"
+    )
     q = _run_to_memory(regs, "hll_regs", "append")
     streamed = (
         spark.table("hll_regs")
@@ -1832,7 +1838,7 @@ def test_streaming_ivf_route_vs_batch_and_lloyd(spark, tmp_path):
 def test_neardup_admission_loop(spark, tmp_path):
     """The self-maintaining dedup index: seed the at-rest index with
     the even-id corpus, replay odd ids in 3 micro-batches through
-    neardup_admit_batch (check vs accumulated index + intra-batch
+    admit_batch(..., "minhash", ...) (check vs accumulated index + intra-batch
     self-join + append), and require the accumulated emissions to equal
     the FULL batch minhash self-join over all documents minus the
     even-even pairs (the only pairs no admission checks — the corpus
@@ -1843,8 +1849,8 @@ def test_neardup_admission_loop(spark, tmp_path):
 
     from sparksent.ext.dedup import minhash_lsh_pairs
     from sparksent.streaming import (
-        minhash_band_index,
-        neardup_admit_batch,
+        admit_batch,
+        band_index,
         write_neardup_index,
     )
     from sparksent.streaming.sources import file_replay_source, write_replay_chunks
@@ -1856,7 +1862,7 @@ def test_neardup_admission_loop(spark, tmp_path):
 
     index_path = str(tmp_path / "admit_index")
     out_path = str(tmp_path / "admit_out")
-    write_neardup_index(minhash_band_index(corpus), index_path, n_buckets=16)
+    write_neardup_index(band_index(corpus, "minhash"), index_path, n_buckets=16)
 
     replay = str(tmp_path / "admit_replay")
     write_replay_chunks(incoming, replay, 3, order_col="doc_id")
@@ -1866,8 +1872,8 @@ def test_neardup_admission_loop(spark, tmp_path):
     q = (
         file_replay_source(spark, replay, schema=schema)
         .writeStream.foreachBatch(
-            lambda b, i: neardup_admit_batch(
-                b, index_path, out_path, batch_id=i, n_buckets=16
+            lambda b, i: admit_batch(
+                b, "minhash", index_path, out_path, batch_id=i, n_buckets=16
             )
         )
         .option("checkpointLocation", str(tmp_path / "admit_ckpt"))
@@ -1907,7 +1913,7 @@ def test_neardup_admission_corrupt_index_raises(spark, tmp_path):
 
     import pytest
 
-    from sparksent.streaming import neardup_admit_batch
+    from sparksent.streaming import admit_batch
     from sparksent.tables import load_table
 
     docs = load_table(spark, SF_DIR_SMALL, "documents").select("doc_id", "text")
@@ -1918,7 +1924,7 @@ def test_neardup_admission_corrupt_index_raises(spark, tmp_path):
         f.write(b"this is not a parquet file")
     batch = docs.filter(F.col("doc_id") < 50).localCheckpoint()
     with pytest.raises(Exception):
-        neardup_admit_batch(batch, index_path, out_path, batch_id=0, n_buckets=16)
+        admit_batch(batch, "minhash", index_path, out_path, batch_id=0, n_buckets=16)
     # and nothing was emitted or admitted: the corrupt index is intact,
     # no pair output exists (the failure happened BEFORE any write)
     assert not os.path.isdir(out_path)
@@ -1932,8 +1938,8 @@ def test_neardup_admission_replay_idempotent(spark, tmp_path):
     batch's own keys out before re-adding them — both byte-identical
     row sets after a replay."""
     from sparksent.streaming import (
-        minhash_band_index,
-        neardup_admit_batch,
+        admit_batch,
+        band_index,
         write_neardup_index,
     )
     from sparksent.tables import load_table
@@ -1946,9 +1952,9 @@ def test_neardup_admission_replay_idempotent(spark, tmp_path):
 
     index_path = str(tmp_path / "re_index")
     out_path = str(tmp_path / "re_out")
-    write_neardup_index(minhash_band_index(corpus), index_path, n_buckets=16)
+    write_neardup_index(band_index(corpus, "minhash"), index_path, n_buckets=16)
 
-    neardup_admit_batch(batch, index_path, out_path, batch_id=7, n_buckets=16)
+    admit_batch(batch, "minhash", index_path, out_path, batch_id=7, n_buckets=16)
     pairs_1 = sorted(
         (r.id_lo, r.id_hi) for r in spark.read.parquet(out_path).collect()
     )
@@ -1958,7 +1964,7 @@ def test_neardup_admission_replay_idempotent(spark, tmp_path):
     assert len(pairs_1) > 0 and len(index_1) == len(set(index_1))
 
     # the replay: same batch, same batch_id
-    neardup_admit_batch(batch, index_path, out_path, batch_id=7, n_buckets=16)
+    admit_batch(batch, "minhash", index_path, out_path, batch_id=7, n_buckets=16)
     pairs_2 = sorted(
         (r.id_lo, r.id_hi) for r in spark.read.parquet(out_path).collect()
     )
@@ -1973,7 +1979,7 @@ def test_image_phash_admission_loop(spark, tmp_path):
     """The admission loop bound to the IMAGE modality (round 11,
     VERDICT r10 ask #8): seed the bucketed index with the even-id
     images, replay odd ids in 3 micro-batches through
-    image_phash_admit_batch, and require the accumulated emissions to
+    admit_batch(..., "image_phash", ...), and require the accumulated emissions to
     equal the batch banded phash self-join over ALL images minus the
     even-even pairs (indexed, never admitted).  The variant-law groups
     of 4 consecutive ids guarantee every class is exercised: exact
@@ -1984,8 +1990,8 @@ def test_image_phash_admission_loop(spark, tmp_path):
 
     from sparksent.ext.imagedup import image_phash_pairs
     from sparksent.streaming import (
-        image_phash_admit_batch,
-        image_phash_band_index,
+        admit_batch,
+        band_index,
         write_neardup_index,
     )
     from sparksent.streaming.sources import file_replay_source, write_replay_chunks
@@ -1997,7 +2003,7 @@ def test_image_phash_admission_loop(spark, tmp_path):
 
     index_path = str(tmp_path / "img_index")
     out_path = str(tmp_path / "img_out")
-    write_neardup_index(image_phash_band_index(corpus), index_path, n_buckets=16)
+    write_neardup_index(band_index(corpus, "image_phash"), index_path, n_buckets=16)
 
     replay = str(tmp_path / "img_replay")
     write_replay_chunks(incoming, replay, 3, order_col="doc_id")
@@ -2007,8 +2013,8 @@ def test_image_phash_admission_loop(spark, tmp_path):
     q = (
         file_replay_source(spark, replay, schema=schema)
         .writeStream.foreachBatch(
-            lambda b, i: image_phash_admit_batch(
-                b, index_path, out_path, batch_id=i, n_buckets=16
+            lambda b, i: admit_batch(
+                b, "image_phash", index_path, out_path, batch_id=i, n_buckets=16
             )
         )
         .option("checkpointLocation", str(tmp_path / "img_ckpt"))
@@ -2041,15 +2047,15 @@ def test_audio_fp_admission_loop(spark, tmp_path):
     """The admission loop bound to the AUDIO modality (the fourth
     binding — every fingerprinted modality now streams): seed the
     bucketed index with even-id clips, replay odd ids in 3
-    micro-batches through audio_fp_admit_batch, and require the
+    micro-batches through admit_batch(..., "audio_fp", ...), and require the
     accumulated emissions to equal the batch banded fingerprint
     self-join over all clips minus the even-even pairs."""
     from pyspark.sql import types as T
 
     from sparksent.ext.audiodup import audio_fp_pairs
     from sparksent.streaming import (
-        audio_fp_admit_batch,
-        audio_fp_band_index,
+        admit_batch,
+        band_index,
         write_neardup_index,
     )
     from sparksent.streaming.sources import file_replay_source, write_replay_chunks
@@ -2061,7 +2067,7 @@ def test_audio_fp_admission_loop(spark, tmp_path):
 
     index_path = str(tmp_path / "aud_index")
     out_path = str(tmp_path / "aud_out")
-    write_neardup_index(audio_fp_band_index(corpus), index_path, n_buckets=16)
+    write_neardup_index(band_index(corpus, "audio_fp"), index_path, n_buckets=16)
 
     replay = str(tmp_path / "aud_replay")
     write_replay_chunks(incoming, replay, 3, order_col="doc_id")
@@ -2071,8 +2077,8 @@ def test_audio_fp_admission_loop(spark, tmp_path):
     q = (
         file_replay_source(spark, replay, schema=schema)
         .writeStream.foreachBatch(
-            lambda b, i: audio_fp_admit_batch(
-                b, index_path, out_path, batch_id=i, n_buckets=16
+            lambda b, i: admit_batch(
+                b, "audio_fp", index_path, out_path, batch_id=i, n_buckets=16
             )
         )
         .option("checkpointLocation", str(tmp_path / "aud_ckpt"))
@@ -2101,7 +2107,7 @@ def test_video_framehash_admission_loop(spark, tmp_path):
     """The admission loop bound to the VIDEO modality (the third
     binding of the hash-agnostic core): seed the bucketed index with
     the even-id clips, replay odd ids in 3 micro-batches through
-    video_framehash_admit_batch, and require the accumulated emissions
+    admit_batch(..., "video_framehash", ...), and require the accumulated emissions
     to equal the batch sampled-frame-agreement self-join over ALL
     clips minus the even-even pairs — exact dups at agreement 1.0 and
     the frame-0-perturbed variants at exactly (kk-1)/kk."""
@@ -2109,8 +2115,8 @@ def test_video_framehash_admission_loop(spark, tmp_path):
 
     from sparksent.ext.videodup import video_framehash_pairs
     from sparksent.streaming import (
-        video_framehash_admit_batch,
-        video_framehash_band_index,
+        admit_batch,
+        band_index,
         write_neardup_index,
     )
     from sparksent.streaming.sources import file_replay_source, write_replay_chunks
@@ -2123,7 +2129,7 @@ def test_video_framehash_admission_loop(spark, tmp_path):
     index_path = str(tmp_path / "vid_index")
     out_path = str(tmp_path / "vid_out")
     write_neardup_index(
-        video_framehash_band_index(corpus), index_path, n_buckets=16
+        band_index(corpus, "video_framehash"), index_path, n_buckets=16
     )
 
     replay = str(tmp_path / "vid_replay")
@@ -2134,8 +2140,8 @@ def test_video_framehash_admission_loop(spark, tmp_path):
     q = (
         file_replay_source(spark, replay, schema=schema)
         .writeStream.foreachBatch(
-            lambda b, i: video_framehash_admit_batch(
-                b, index_path, out_path, batch_id=i, n_buckets=16
+            lambda b, i: admit_batch(
+                b, "video_framehash", index_path, out_path, batch_id=i, n_buckets=16
             )
         )
         .option("checkpointLocation", str(tmp_path / "vid_ckpt"))
@@ -2167,7 +2173,7 @@ def test_winnowing_admission_loop(spark, tmp_path):
     """The admission loop bound to WINNOWING fingerprints (the fifth
     binding — every dedup signature family now streams): seed the
     bucketed index with even-id documents, replay odd ids in 3
-    micro-batches through winnowing_admit_batch, and require the
+    micro-batches through admit_batch(..., "winnowing", ...), and require the
     accumulated emissions to equal the uncapped batch
     winnowing_pairs(max_df=None) over all documents minus the
     even-even pairs (indexed, never admitted).  Exercises vs-index,
@@ -2177,8 +2183,8 @@ def test_winnowing_admission_loop(spark, tmp_path):
 
     from sparksent.ext.dedup import winnowing_pairs
     from sparksent.streaming import (
-        winnowing_admit_batch,
-        winnowing_band_index,
+        admit_batch,
+        band_index,
         write_neardup_index,
     )
     from sparksent.streaming.sources import file_replay_source, write_replay_chunks
@@ -2190,7 +2196,7 @@ def test_winnowing_admission_loop(spark, tmp_path):
 
     index_path = str(tmp_path / "win_index")
     out_path = str(tmp_path / "win_out")
-    write_neardup_index(winnowing_band_index(corpus), index_path, n_buckets=16)
+    write_neardup_index(band_index(corpus, "winnowing"), index_path, n_buckets=16)
 
     replay = str(tmp_path / "win_replay")
     write_replay_chunks(incoming, replay, 3, order_col="doc_id")
@@ -2200,8 +2206,8 @@ def test_winnowing_admission_loop(spark, tmp_path):
     q = (
         file_replay_source(spark, replay, schema=schema)
         .writeStream.foreachBatch(
-            lambda b, i: winnowing_admit_batch(
-                b, index_path, out_path, batch_id=i, n_buckets=16
+            lambda b, i: admit_batch(
+                b, "winnowing", index_path, out_path, batch_id=i, n_buckets=16
             )
         )
         .option("checkpointLocation", str(tmp_path / "win_ckpt"))
@@ -2279,27 +2285,6 @@ def test_ivf_serve_loop_matches_batch(spark, tmp_path):
         for r in ivf_trained_topk(emb, queries, n_centroids=kc).collect()
     }
     assert got == want and len(want) == 30 * 5
-
-
-def test_winnowing_nondefault_text_col(spark, tmp_path):
-    """ADVICE r11: winnowing_band_index / winnowing_admit_batch accept
-    a text_col but didn't forward it, so any non-default caller got an
-    unresolved-column AnalysisException.  Rename the fixture column and
-    require the band index to equal the default-named run."""
-    from sparksent.streaming import winnowing_band_index
-    from sparksent.tables import load_table
-
-    docs = load_table(spark, SF_DIR_SMALL, "documents").select("doc_id", "text")
-    renamed = docs.withColumnRenamed("text", "body")
-    want = {
-        (r.band, r.bsig, r.corpus_id)
-        for r in winnowing_band_index(docs).collect()
-    }
-    got = {
-        (r.band, r.bsig, r.corpus_id)
-        for r in winnowing_band_index(renamed, text_col="body").collect()
-    }
-    assert got == want and len(want) > 0
 
 
 def test_frame_agreement_unlike_lengths_dropped(spark):

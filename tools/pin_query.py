@@ -26,15 +26,12 @@ def main() -> None:
     names = sys.argv[1:]
     if not names:
         sys.exit("usage: pin_query.py <registry name> [...]")
-    from pyspark.sql import SparkSession
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    from sparksent.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the bench.py session (UTC, Arrow, checkpoint manager), at local[32]
+    # with 32 shuffle partitions
+    spark = get_spark("pin_query", cpus=32)
     spark.sparkContext.setLogLevel("ERROR")
     from sparksent.registry import queries
 
