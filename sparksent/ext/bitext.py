@@ -24,6 +24,14 @@ Fixture law: side A = even vec_id, side B = odd (the embeddings table
 has no language column; parity is the deterministic split every
 engine agrees on).
 
+Scoring: side A, which the plan broadcast into a nested-loop join
+before, is collected to the driver once, and ``similarity.cross_dot``
+crosses each Arrow batch of side B with the whole A matrix in one numpy
+pass (row blocks of at most ``similarity.CROSS_BLOCK_PAIRS`` pairs), so
+each vector crosses the Python boundary once instead of once per pair.
+The division by the norms stays a JVM expression after the kernel: a
+zero-norm vector raises ANSI ``DIVIDE_BY_ZERO``.
+
 100-TB shape: this operator is the SCORING + SELECTION stage; the
 all-pairs frame here is the fixture-scale candidate generator, and at
 production scale the candidate pairs come from the ANN family
@@ -38,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import cosine_sql, dot_arrow, norm
+from .similarity import cosine_sql, cross_dot, norm
 
 K_NN = 4
 SIM_SCALE = 1_000_000
@@ -70,15 +78,15 @@ def bitext_mine_margin(
     translation pairs under the ratio margin.  The scored candidate
     frame is localCheckpoint-pinned — four consumers (two top-k
     neighborhood sums, two argmax windows) would otherwise re-run the
-    Arrow dot stage per branch."""
+    all-pairs kernel per branch."""
     a, b = _sides(emb, id_col, vec_col)
     pairs = (
-        b.crossJoin(F.broadcast(a))
+        cross_dot(b, a, "bv", "av")
         .select(
             "src_id",
             "tgt_id",
             F.floor(
-                dot_arrow(F.col("av"), F.col("bv"))
+                F.col("dot")
                 / (F.col("na") * F.col("nb"))
                 * F.lit(float(SIM_SCALE))
             )

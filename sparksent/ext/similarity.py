@@ -2,10 +2,14 @@
 
 Two tiers (SURVEY.md §7.1 M5):
 
-- brute_force_topk: exact cosine top-k. The query set is broadcast; the
-  corpus is scanned once; per-partition partial top-k via the analytic
-  rank keeps the shuffle tiny. This is the correctness baseline and is
-  already the right plan when the query set is small.
+- brute_force_topk: exact cosine top-k. The query set, which the plan
+  broadcast into a nested-loop join before, is collected to the driver
+  once and crossed with the corpus by :func:`cross_dot`: one scan, one
+  ``mapInPandas`` pass in which each corpus Arrow batch meets the whole
+  query matrix, split into row blocks of at most ``CROSS_BLOCK_PAIRS``
+  pairs. Per-partition partial top-k via the analytic rank keeps the
+  shuffle tiny. This is the correctness baseline and is already the
+  right plan when the query set is small (it must fit the driver).
 - lsh_topk: random-hyperplane LSH (sign-random-projection) — each vector
   lands in a 2^NUM_PLANES bucket; search touches only the query's
   bucket. The planes are deterministic ±1 vectors derived from an LCG so
@@ -15,7 +19,10 @@ Two tiers (SURVEY.md §7.1 M5):
   the documented recall escalation.
 
 All dot products accumulate left-to-right in double on both engines —
-bit-identical scores, verified in tests.
+bit-identical scores, verified in tests. ``hard_negatives_topk`` and
+``ext.bitext`` score on the same kernel; the candidate-pair joins and
+the IVF centroid assignments, which carry vectors downstream, keep the
+per-pair :func:`dot_arrow`.
 """
 
 from __future__ import annotations
@@ -25,12 +32,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 NUM_PLANES = 4
 PLANE_TARGET_LOAD = 32  # expected rows per LSH bucket the plane count aims at
 PLANE_AUTO_MAX = 8  # largest plane count the pre-generated oracle branches cover
 _LCG_A, _LCG_C, _LCG_M = 1103515245, 12345, 2_147_483_647
+CROSS_BLOCK_PAIRS = 1 << 18  # pairs per cross_dot score block (2 MB of doubles)
 
 
 def num_planes_for(
@@ -92,6 +100,13 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def _f64_matrix(vectors: pd.Series) -> np.ndarray:
+    """(rows, dim) float64 matrix of a Series of equal-length float
+    vectors: the exact float32 -> float64 widening that both Arrow dot
+    kernels multiply."""
+    return np.stack(vectors.to_numpy()).astype(np.float64)
+
+
 # returnType as a DataType INSTANCE, not a DDL string: string schemas
 # parse through the active SparkSession, which would make importing this
 # module require a running session (it broke pytest collection).
@@ -114,12 +129,70 @@ def dot_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
     n = len(a)
     if n == 0:
         return pd.Series(np.empty(0, dtype=np.float64))
-    am = np.stack(a.to_numpy()).astype(np.float64)
-    bm = np.stack(b.to_numpy()).astype(np.float64)
+    am, bm = _f64_matrix(a), _f64_matrix(b)
     acc = np.zeros(n, dtype=np.float64)
     for d in range(am.shape[1]):
         acc = acc + am[:, d] * bm[:, d]
     return pd.Series(acc)
+
+
+def cross_dot(
+    left: DataFrame, right: DataFrame, left_vec: str, right_vec: str
+) -> DataFrame:
+    """Every (left row, right row) pair with its vector dot product.
+
+    The all-pairs kernel behind the exact cross-join scorers: ``right``
+    (the small side) is collected to the driver once and ships inside
+    the function, and one ``mapInPandas`` over ``left`` crosses each
+    Arrow batch with the whole right matrix in one numpy pass. Each
+    vector therefore crosses the Python boundary once, not once per
+    pair as in a ``crossJoin`` + :func:`dot_arrow` plan.
+
+    Output: ``left``'s columns without ``left_vec``, then ``right``'s
+    without ``right_vec``, then ``dot`` (double). ``dot`` is
+    bit-identical to :func:`dot_arrow`: float64 products added one dim
+    at a time in dim order, starting from 0.0. A left batch is split
+    into row blocks of at most ``CROSS_BLOCK_PAIRS`` pairs, which bounds
+    the score matrix and each emitted frame. An empty ``right`` yields
+    an empty frame. Norms and the division by them are the caller's,
+    as JVM expressions, so a zero norm still raises ANSI
+    ``DIVIDE_BY_ZERO`` where the caller divides."""
+    names = [c for c in left.columns if c != left_vec]
+    fields = [f for f in left.schema.fields if f.name != left_vec]
+    fields += [f for f in right.schema.fields if f.name != right_vec]
+    schema = StructType(fields + [StructField("dot", DoubleType())])
+    rpdf = right.toPandas()
+    m = len(rpdf)
+    if m == 0:
+        return left.sparkSession.createDataFrame([], schema)
+    rcols = rpdf.drop(columns=[right_vec])
+    rt = _f64_matrix(rpdf[right_vec]).T.copy()
+    step = max(1, CROSS_BLOCK_PAIRS // m)
+
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            lm = _f64_matrix(pdf[left_vec])
+            lcols = pdf[names]
+            for lo in range(0, len(lm), step):
+                blk = lm[lo : lo + step]
+                acc = np.zeros((len(blk), m), dtype=np.float64)
+                for d in range(blk.shape[1]):
+                    acc += np.multiply.outer(blk[:, d], rt[d])
+                li = np.repeat(np.arange(lo, lo + len(blk)), m)
+                ri = np.tile(np.arange(m), len(blk))
+                out = pd.concat(
+                    [
+                        lcols.iloc[li].reset_index(drop=True),
+                        rcols.iloc[ri].reset_index(drop=True),
+                    ],
+                    axis=1,
+                )
+                out["dot"] = acc.ravel()
+                yield out
+
+    return left.mapInPandas(kernel, schema)
 
 
 def norm(a: Column) -> Column:
@@ -169,13 +242,11 @@ def brute_force_topk(
         norm(F.col(vec_col)).alias("nc"),
     )
     scored = (
-        c.crossJoin(F.broadcast(q))
+        cross_dot(c, q, "cv", "qv")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         # norms materialize per SIDE (once per vector); the pair-level
-        # dot is Arrow-vectorized — same double values as cosine()
-        .withColumn(
-            "sim", dot_arrow(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc"))
-        )
+        # dot is the all-pairs kernel — same double values as cosine()
+        .withColumn("sim", F.col("dot") / (F.col("nq") * F.col("nc")))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id")
@@ -1186,9 +1257,10 @@ def hard_negatives_topk(
     predicate filters BEFORE the rank so the k slots are all negatives.
 
     Scale: candidate generation is pluggable — this exact form scans
-    the corpus once with the anchor set broadcast (the
-    brute_force_topk shape); at corpus scale swap the candidate join
-    for the registered LSH/IVF bucket paths (lsh_topk / ivf_topk) and
+    the corpus once against the collected anchor set (the
+    brute_force_topk shape on :func:`cross_dot`); at corpus scale swap
+    the candidate join for the registered LSH/IVF bucket paths
+    (lsh_topk / ivf_topk) and
     keep the same label filter + rank tail, trading recall for the
     bucket-pruned scan exactly as the similarity_topk ladder pins.
     """
@@ -1205,11 +1277,9 @@ def hard_negatives_topk(
         norm(F.col(vec_col)).alias("nc"),
     )
     scored = (
-        c.crossJoin(F.broadcast(q))
+        cross_dot(c, q, "cv", "qv")
         .filter(F.col("n_label") != F.col("q_label"))
-        .withColumn(
-            "sim", dot_arrow(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc"))
-        )
+        .withColumn("sim", F.col("dot") / (F.col("nq") * F.col("nc")))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id")

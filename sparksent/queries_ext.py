@@ -137,7 +137,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for the 10-query set over the full corpus —
-    broadcast queries, one corpus scan, per-query analytic rank."""
+    queries collected once, one corpus scan, per-query analytic rank."""
     emb = _emb(spark, sf_dir)
     return similarity.brute_force_topk(
         emb, emb.filter(F.col("vec_id") < N_QUERIES), k=TOPK
@@ -1707,9 +1707,9 @@ def q_hard_negatives_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-query set), the 5 most-cosine-similar vectors with a DIFFERENT
     label — label mismatch filtered before the rank so every slot is a
     negative. Exact baseline on the brute_force_topk shape (anchors
-    broadcast, one corpus scan, Arrow pair-dot); at corpus scale the
-    candidate join swaps for the registered LSH/IVF bucket paths with
-    the same filter + rank tail."""
+    collected once, one corpus scan, the all-pairs kernel); at corpus
+    scale the candidate join swaps for the registered LSH/IVF bucket
+    paths with the same filter + rank tail."""
     emb = _emb(spark, sf_dir)
     return similarity.hard_negatives_topk(
         emb, emb.filter(F.col("vec_id") < N_QUERIES), k=TOPK

@@ -9,6 +9,8 @@ the *same* logical plans scale to a real cluster:
   is the *initial* number only because AQE coalesces.
 - Streaming state runs in ``STATE_PARTITIONS`` partitions per stateful
   operator, whatever the core count; see below.
+- Generated code stays compiled across reruns: the codegen cache holds
+  ``CODEGEN_CACHE_ENTRIES`` classes; see below.
 - Arrow enabled for the few Pandas-UDF paths (ext.multimodal, streaming
   count-window state) — batch transfer, never per-row pickling.
 - Session timezone pinned UTC so event-time window arithmetic matches the
@@ -67,6 +69,35 @@ is read only by streaming queries.
   session holds both counts (``tests/test_session.py``). A PySpark that
   drops the conf fails those tests instead of going back to the core
   count.
+
+Generated-code cache
+--------------------
+Spark compiles each whole-stage-codegen stage and expression projection
+into a Java class and keeps the compiled classes in an LRU cache keyed
+by the generated source, ``spark.sql.codegen.cache.maxEntries`` entries
+long (100 by default; a static conf, so it is set here). A plan that
+generates more classes than the cache holds, rerun in a loop, evicts
+its own classes before it reaches them again and recompiles every one
+of them on every run: compiling is driver CPU (Janino), and a fresh
+class runs cold until the JIT catches up.
+
+- **The rule is the constant ``CODEGEN_CACHE_ENTRIES`` = 1000**, about
+  four times the largest per-pass count measured. Spark's
+  ``CodegenMetrics`` compile count per timed pass of ``perfbench/run.py``
+  (``nproc`` 4, ``SPARK_GRAFT_CPUS`` 4, one run per size, SCALE.md
+  "Generated-code cache size"): the ``registry`` workload's three
+  queries compile 228 classes per pass at 100 entries, 61-76 at 250 and
+  0-14 at 500, 1000 and 4000; ``topology_drain`` compiles 41-67 per
+  trigger at 100 and 6 at 250 and above. The 6-18 left compile code
+  whose text changes from run to run, which no cache size keeps.
+- **Memory.** An entry holds one compiled class, its loader and its
+  byte code. A session holds as many entries as it generated distinct
+  classes, up to the cap; the sweep's ``mem.peak_pss_mb`` moved within
+  its run-to-run noise (2.7-4.2 GB, no trend with the size).
+- **Guarded.** ``tests/test_session.py`` reads the conf back from a
+  fresh session and reruns ``dedup_multimodal_keep_set`` (about 130
+  classes per run) in the test session, asserting that the rerun
+  compiles almost nothing.
 """
 
 from __future__ import annotations
@@ -76,12 +107,14 @@ import os
 from pyspark.sql import SparkSession
 
 STATE_PARTITIONS = 1
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(app_name: str = "sparksent", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the session. ``cpus`` defaults to $SPARK_GRAFT_CPUS
     or '*'; the shuffle partitions follow the same value, or 32 for '*'.
-    Streaming state gets ``STATE_PARTITIONS`` partitions per operator."""
+    Streaming state gets ``STATE_PARTITIONS`` partitions per operator;
+    the generated-code cache holds ``CODEGEN_CACHE_ENTRIES`` classes."""
     n = cpus or os.environ.get("SPARK_GRAFT_CPUS")
     builder = (
         SparkSession.builder.master(f"local[{n or '*'}]")
@@ -101,6 +134,7 @@ def get_spark(app_name: str = "sparksent", cpus: int | None = None) -> SparkSess
             "spark.sql.streaming.internal.stateStore.partitions", str(STATE_PARTITIONS)
         )
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/sparksent-warehouse"),

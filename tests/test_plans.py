@@ -876,17 +876,21 @@ def test_corr_matrix_single_daily_aggregate(spark):
     assert count_data_shuffles(plan) <= 2
 
 
-def test_hard_negatives_broadcast_anchor_arrow_dot(spark):
-    """Hard-negative mining keeps the brute-topk shape: the anchor set
-    broadcasts into a single corpus scan (the one BNLJ), the pair dot
-    is the Arrow-batched pandas UDF, and the per-anchor rank-limit
-    pushes into the shuffle (WindowGroupLimit) so only candidate rows
-    near the top-k ever sort."""
+def test_hard_negatives_collected_anchors_one_kernel_pass(spark):
+    """Hard-negative mining keeps the brute-topk shape on the all-pairs
+    kernel: the anchor set is collected at construction and crossed
+    with the corpus in one MapInPandas over a single corpus scan (no
+    nested-loop join, no per-pair Python eval), and the per-anchor
+    rank-limit pushes into the shuffle (WindowGroupLimit) so only
+    candidate rows near the top-k ever sort."""
     plan = plan_of(spark, "hard_negatives_topk")
-    assert len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan)) == 1
-    assert "ArrowEvalPython" in plan
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    assert "ArrowEvalPython" not in plan
     assert "WindowGroupLimit" in plan
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2
+    # the corpus scan; the anchors' scan ran in the construction collect
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
 
 
 def test_skyline_aggregate_then_broadcast_back(spark):

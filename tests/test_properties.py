@@ -511,6 +511,75 @@ def test_ann_topk_recall_ladder(spark):
     assert refine >= 0.55 and adc >= 0.10, (refine, adc)
 
 
+def _vector_frame(spark, vecs, first_id: int, tag: str):
+    return spark.createDataFrame(
+        [(first_id + i, tag, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "id long, tag string, v array<float>",
+    )
+
+
+def test_cross_dot_bit_identical_to_crossjoin_dot_arrow(spark, monkeypatch):
+    """The all-pairs kernel scores every pair exactly as the
+    crossJoin + dot_arrow form it replaced: same pairs, bit-identical
+    doubles, duplicate vectors and row-block splits included."""
+    import numpy as np
+
+    from sparksent.ext import similarity
+    from sparksent.ext.similarity import cross_dot, dot_arrow
+
+    rng = np.random.default_rng(7)
+    lv = rng.standard_normal((37, 64)).astype(np.float32)
+    lv[5] = lv[2]  # duplicate vectors on each side and across sides
+    rv = rng.standard_normal((11, 64)).astype(np.float32)
+    rv[3] = rv[0]
+    rv[7] = lv[1]
+    left = _vector_frame(spark, lv, 0, "l").toDF("lid", "ltag", "lv").repartition(3)
+    right = _vector_frame(spark, rv, 100, "r").toDF("rid", "rtag", "rv")
+    want = {
+        (r.lid, r.rid): r.dot
+        for r in left.crossJoin(F.broadcast(right))
+        .select("lid", "rid", dot_arrow(F.col("rv"), F.col("lv")).alias("dot"))
+        .collect()
+    }
+    # one left row per block (5 < its 11 pairs), then one block per batch
+    for block_pairs in (5, similarity.CROSS_BLOCK_PAIRS):
+        monkeypatch.setattr(similarity, "CROSS_BLOCK_PAIRS", block_pairs)
+        got = cross_dot(left, right, "lv", "rv")
+        assert got.columns == ["lid", "ltag", "rid", "rtag", "dot"]
+        rows = got.collect()
+        assert {(r.ltag, r.rtag) for r in rows} == {("l", "r")}
+        assert len(rows) == len(want) == 37 * 11
+        assert {(r.lid, r.rid): r.dot for r in rows} == want
+
+
+def test_cross_dot_empty_right_side_is_empty(spark):
+    import numpy as np
+
+    from sparksent.ext.similarity import cross_dot
+
+    left = _vector_frame(spark, np.ones((4, 64), np.float32), 0, "l")
+    right = _vector_frame(spark, np.ones((1, 64), np.float32), 9, "r").filter("id < 0")
+    out = cross_dot(left, right.toDF("rid", "rtag", "rv"), "v", "rv")
+    assert out.columns == ["id", "tag", "rid", "rtag", "dot"]
+    assert out.collect() == []
+
+
+def test_bitext_zero_norm_vector_raises_divide_by_zero(spark):
+    """A zero vector has norm 0, so its cosine divides by zero: under
+    ANSI the margin miner fails with DIVIDE_BY_ZERO, it does not drop
+    or NULL the pairs."""
+    import numpy as np
+    import pytest
+
+    from sparksent.ext.bitext import bitext_mine_margin
+
+    vecs = np.random.default_rng(3).standard_normal((8, 64)).astype(np.float32)
+    vecs[5] = 0.0  # an odd id: side B
+    emb = _vector_frame(spark, vecs, 0, "x").toDF("vec_id", "tag", "embedding")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        bitext_mine_margin(emb).collect()
+
+
 def clustered_embeddings(spark, n_components: int = 10, noise: float = 0.5):
     """Seeded mixture-of-Gaussians fixture DERIVED from the existing
     embeddings table (VERDICT r8 ask #1): component centroids are unit
